@@ -223,7 +223,8 @@ object CoreQueries {
         // measures what a production reader pays: the zero-shuffle join
         // itself. Keyed by the session too because the bucketing
         // metadata lives in the session catalog (writeBucketed's
-        // saveAsTable), which a different SparkSession wouldn't see.
+        // saveAsTable), which a different SparkSession wouldn't see —
+        // hence a map of its own, not [[Shared.memo]] (tag + dataset).
         val root = q153Layout.computeIfAbsent(
           (System.identityHashCode(s), Shared.datasetKey(d)),
           _ => Shared.timedMemoBuild("q153layout") {

@@ -432,8 +432,8 @@ object GraphQueries {
   )
 
   /** Distinct co-purchase edges (a < b: parts sharing an order),
-    * materialized ONCE per (process, dataset) to scratch parquet — the
-    * winnow-memo contract, shared by q218 (triangles) and q236 (k-core).
+    * materialized ONCE per (process, dataset) to scratch parquet by
+    * [[Shared.memo]], shared by q218 (triangles) and q236 (k-core).
     * Built from per-order sorted baskets (one collect_set aggregation;
     * map-side combine collapses duplicate (order, part) rows pre-shuffle;
     * basket width is order-size-bounded) + an array-HOF ordered-pair
@@ -441,84 +441,63 @@ object GraphQueries {
     * fact×fact self-join (r9 verdict: that join was ~2/3 of q218's
     * cost).
     */
-  private[graft] def coPurchaseEdges(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = edgeMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("copurchase") {
-        val r = Shared.scratchRoot("copurchase", key)
-        val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
-        li.groupBy("l_orderkey")
-          .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-          .filter(size(col("ps")) >= 2)
-          .select(explode(flatten(transform(col("ps"), (x, i) =>
-            transform(slice(col("ps"), i + lit(2), size(col("ps"))),
-              y => struct(x.as("a"), y.as("b")))))).as("p"))
-          .select(col("p.a").as("a"), col("p.b").as("b"))
-          .distinct()
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-
-  private val edgeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def coPurchaseEdges(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("copurchase", d) { r =>
+      val li = Tables.lineitem(s, d).select("l_orderkey", "l_partkey")
+      li.groupBy("l_orderkey")
+        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+        .filter(size(col("ps")) >= 2)
+        .select(explode(flatten(transform(col("ps"), (x, i) =>
+          transform(slice(col("ps"), i + lit(2), size(col("ps"))),
+            y => struct(x.as("a"), y.as("b")))))).as("p"))
+        .select(col("p.a").as("a"), col("p.b").as("b"))
+        .distinct()
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** Symmetrized degree table (v, deg) of the co-purchase graph,
     * materialized ONCE per (process, dataset) beside [[coPurchaseEdges]]
-    * (same fingerprint-keyed scratch contract). Four of the suite's
+    * ([[Shared.memo]]). Four of the suite's
     * heaviest rows re-derived this aggregation every run (q218
     * orientation, q363 wedge denominator + orientation, q364 edge-end
     * degrees; r11 verdict finding 2) — the memo makes it one build and a
     * node-grain parquet read per consumer.
     */
-  private[graft] def coPurchaseDegrees(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = degreeMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("copurchdeg") {
-        val r = Shared.scratchRoot("copurchdeg", key)
-        val e = coPurchaseEdges(s, d)
-        e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-          .groupBy("v").agg(count(lit(1)).as("deg"))
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-
-  private val degreeMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def coPurchaseDegrees(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("copurchdeg", d) { r =>
+      val e = coPurchaseEdges(s, d)
+      e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
+        .groupBy("v").agg(count(lit(1)).as("deg"))
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** Oriented triangle triples (u, w1, w2) of the co-purchase graph,
     * materialized ONCE per (process, dataset) beside [[coPurchaseEdges]]
-    * (same scratch contract): the (deg, id)-oriented wedge + closing-edge
+    * ([[Shared.memo]]): the (deg, id)-oriented wedge + closing-edge
     * enumeration (Suri & Vassilvitskii — the q218 machinery) is the
     * expensive stage of THREE suite queries (q218 count, q363
     * transitivity, q454 truss round 1), and the triple table is
     * triangle-count-sized — far smaller than the wedge stream that
     * builds it.
     */
-  private[graft] def coPurchaseTriangles(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = triangleMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("copurchtri") {
-        val r = Shared.scratchRoot("copurchtri", key)
-        // the bloom prefilter below trades per-wedge probe CPU against
-        // closing-exchange volume: on a CLUSTER the 411M-row network
-        // shuffle dominates and the filter wins outright; in local mode
-        // the exchange is memory-speed and the probe CPU measurably
-        // LOSES (27.8 s vs 23.2 s at sf1) — so the switch follows the
-        // deployment, and TriangleBloomSpec pins both paths to
-        // identical triples
-        triangleTriplesBuild(s, d, useBloom = !s.sparkContext.isLocal)
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
+  private[graft] def coPurchaseTriangles(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("copurchtri", d) { r =>
+      // the bloom prefilter below trades per-wedge probe CPU against
+      // closing-exchange volume: on a CLUSTER the 411M-row network
+      // shuffle dominates and the filter wins outright; in local mode
+      // the exchange is memory-speed and the probe CPU measurably
+      // LOSES (27.8 s vs 23.2 s at sf1) — so the switch follows the
+      // deployment, and TriangleBloomSpec pins both paths to
+      // identical triples
+      triangleTriplesBuild(s, d, useBloom = !s.sparkContext.isLocal)
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** the copurchtri build plan — see [[coPurchaseTriangles]] for the
-    * memo contract and the bloom-switch rationale
+    * bloom-switch rationale
     */
   private[graft] def triangleTriplesBuild(s: SparkSession, d: String,
       useBloom: Boolean): DataFrame = {
@@ -541,7 +520,7 @@ object GraphQueries {
           // wedge self-join on u, write it once bucketBy(u) + sortBy(u)
           // — the wedge join then rides the bucketing metadata with ZERO
           // exchange and zero sort off the scan. Measured at sf1
-          // (TriangleLayoutBench, paired runs): 19.2→18.8, 18.6→14.8,
+          // (paired runs): 19.2→18.8, 18.6→14.8,
           // 21.8→17.9 s, and 17.6→12.3 s in the shipped one-file-per-
           // bucket form — the bucketed build wins every pair locally, and on a network-shuffle cluster the removed
           // exchanges are 2× the oriented-edge table's volume. The
@@ -550,10 +529,10 @@ object GraphQueries {
           // catalog entry is per (pid, dataset-md5), so concurrent
           // sessions and dataset regenerations never collide.
           // unique per INVOCATION (r15 ADVICE): the memo serializes the
-          // q-path build, but specs and TriangleLayoutBench call this
-          // builder directly — a fixed per-(pid, dataset) name would let
-          // two in-process invocations race on one catalog entry + data
-          // path, so the write-once contract gets an atomic suffix
+          // q-path build, but specs call this builder directly — a
+          // fixed per-(pid, dataset) name would let two in-process
+          // invocations race on one catalog entry + data path, so the
+          // write-once contract gets an atomic suffix
           val edRoot = Shared.scratchRoot(
             s"tried${triedInvocations.getAndIncrement()}", Shared.datasetKey(d))
           val edTbl = edRoot.getFileName.toString
@@ -635,9 +614,6 @@ object GraphQueries {
             .select("u", "w1", "w2")
     }
   }
-
-  private val triangleMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** per-invocation suffix for the bucketed oriented-edge table — see
     * [[triangleTriplesBuild]]'s write-once rationale

@@ -164,25 +164,17 @@ object R12Queries {
       .select("cid", "band", "bk")
 
   /** the kNN graph, materialized ONCE per (process, dataset) to scratch
-    * parquet (the coPurchaseEdges memo contract): three queries sit on
+    * parquet ([[Shared.memo]]): three queries sit on
     * it (q439 serve, q451 audit, q452 attach via the same bucket table)
     * and the LSH + scoring build is the expensive stage of each. The
     * un-memoized [[knnGraphEdges]] stays the spec's plan-audit surface.
     */
-  private[graft] def knnGraphMemoized(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = knnGraphMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("knngraph") {
-        val r = Shared.scratchRoot("knngraph", key)
-        knnGraphEdges(s, d)
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-
-  private val knnGraphMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def knnGraphMemoized(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("knngraph", d) { r =>
+      knnGraphEdges(s, d)
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   private[graft] def knnGraphEdges(s: SparkSession, d: String): DataFrame =
     knnGraphEdgesOver(corpusVecs(s, d))

@@ -84,128 +84,102 @@ object R13Queries {
     */
   private[operators] def hnswUpper(s: SparkSession, d: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    val key = Shared.datasetKey(d)
-    val root = hnswUpperMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("hnswupper") {
-        val r = Shared.scratchRoot("hnswupper", key).toString
-        val graph = R12Queries.knnGraphMemoized(s, d)
-        val q = R12Queries.probeVecs(s, d)
-        val degt = graph.groupBy("src").agg(count(lit(1)).as("dg"))
-        val upperNodes = Shared.pinModelSized(degt
-          .orderBy(col("dg").desc, col("src").asc).limit(UpperK)
-          .select(col("src").as("n"))) // UpperK rows — see pinModelSized
-        val upperEdges = graph
-          .join(broadcast(upperNodes.select(col("n").as("src"))),
-            Seq("src"), "left_semi")
-          .join(broadcast(upperNodes.select(col("n").as("dst"))),
-            Seq("dst"), "left_semi")
-          .select("src", "dst") // ≤ UpperK·KnnM rows — see pinModelSized
-        val upperEdgesP = Shared.pinModelSized(upperEdges)
-        val seed0 = q.select("qid")
-          .crossJoin(broadcast(R12Queries.entryPoints(graph)))
-        var ub = Shared.pinModelSized(
-          top(R12Queries.beamScore(s, d, seed0), 4))
-        for (_ <- 1 to 2) ub = beamRound(s, d, ub, upperEdgesP, 4)
-        upperNodes.write.mode("overwrite").parquet(s"$r/nodes")
-        upperEdgesP.write.mode("overwrite").parquet(s"$r/edges")
-        top(ub, 2).write.mode("overwrite").parquet(s"$r/ent")
-        r
-      })
+    val root = Shared.memo("hnswupper", d) { r =>
+      val graph = R12Queries.knnGraphMemoized(s, d)
+      val q = R12Queries.probeVecs(s, d)
+      val degt = graph.groupBy("src").agg(count(lit(1)).as("dg"))
+      val upperNodes = Shared.pinModelSized(degt
+        .orderBy(col("dg").desc, col("src").asc).limit(UpperK)
+        .select(col("src").as("n"))) // UpperK rows — see pinModelSized
+      val upperEdges = graph
+        .join(broadcast(upperNodes.select(col("n").as("src"))),
+          Seq("src"), "left_semi")
+        .join(broadcast(upperNodes.select(col("n").as("dst"))),
+          Seq("dst"), "left_semi")
+        .select("src", "dst") // ≤ UpperK·KnnM rows — see pinModelSized
+      val upperEdgesP = Shared.pinModelSized(upperEdges)
+      val seed0 = q.select("qid")
+        .crossJoin(broadcast(R12Queries.entryPoints(graph)))
+      var ub = Shared.pinModelSized(
+        top(R12Queries.beamScore(s, d, seed0), 4))
+      for (_ <- 1 to 2) ub = beamRound(s, d, ub, upperEdgesP, 4)
+      upperNodes.write.mode("overwrite").parquet(s"$r/nodes")
+      upperEdgesP.write.mode("overwrite").parquet(s"$r/edges")
+      top(ub, 2).write.mode("overwrite").parquet(s"$r/ent")
+      r
+    }
     (s.read.parquet(s"$root/nodes"), s.read.parquet(s"$root/edges"),
       s.read.parquet(s"$root/ent"))
   }
-  private val hnswUpperMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** exact brute-force cosine top-3 eval table (probe-grain, 15 rows),
     * memoized beside [[hnswUpper]] — the recall denominator both HNSW
     * queries compare against
     */
-  private[operators] def bruteTop3(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = bruteTop3Memo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("brutetop3") {
-        val r = Shared.scratchRoot("brutetop3", key)
-        // ‖v‖ once per row on each side (r17): cos = dot/(qn·cn) on the
-        // identical doubles — per-pair cost drops from 3 folds to 1
-        val q = R12Queries.probeVecs(s, d).select(col("qid"), col("qv"),
-          graft.functions.vec.norm(col("qv")).as("qn"))
-        val cn = R12Queries.corpusVecs(s, d).select(col("cid"), col("cv"),
-          graft.functions.vec.norm(col("cv")).as("cnv"))
-        top(broadcast(q).crossJoin(cn)
-            .select(col("qid"), col("cid"),
-              (graft.functions.vec.dot(col("qv"), col("cv")) /
-                (col("qn") * col("cnv"))).as("cos")), 3)
-          .select("qid", "cid")
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-  private val bruteTop3Memo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[operators] def bruteTop3(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("brutetop3", d) { r =>
+      // ‖v‖ once per row on each side (r17): cos = dot/(qn·cn) on the
+      // identical doubles — per-pair cost drops from 3 folds to 1
+      val q = R12Queries.probeVecs(s, d).select(col("qid"), col("qv"),
+        graft.functions.vec.norm(col("qv")).as("qn"))
+      val cn = R12Queries.corpusVecs(s, d).select(col("cid"), col("cv"),
+        graft.functions.vec.norm(col("cv")).as("cnv"))
+      top(broadcast(q).crossJoin(cn)
+          .select(col("qid"), col("cid"),
+            (graft.functions.vec.dot(col("qv"), col("cv")) /
+              (col("qn") * col("cnv"))).as("cos")), 3)
+        .select("qid", "cid")
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** exact brute-force cosine top-3 over the LIVE (non-tombstoned)
     * corpus — the recall denominator the q499/q503 repair-vs-rebuild
     * pair shares, memoized beside [[bruteTop3]] (tag `brutelive`)
     */
   private[operators] def bruteLiveTop3(s: SparkSession, d: String)
-      : DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = bruteLiveMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("brutelive") {
-        val r = Shared.scratchRoot("brutelive", key)
-        // ‖v‖ once per row on each side (r17) — see bruteTop3
-        val q = R12Queries.probeVecs(s, d).select(col("qid"), col("qv"),
-          graft.functions.vec.norm(col("qv")).as("qn"))
-        val cn = R12Queries.corpusVecs(s, d).filter(col("cid") % 7 =!= 0)
-          .select(col("cid"), col("cv"),
-            graft.functions.vec.norm(col("cv")).as("cnv"))
-        top(broadcast(q).crossJoin(cn)
-            .select(col("qid"), col("cid"),
-              (graft.functions.vec.dot(col("qv"), col("cv")) /
-                (col("qn") * col("cnv"))).as("cos")), 3)
-          .select("qid", "cid")
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-  private val bruteLiveMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+      : DataFrame =
+    s.read.parquet(Shared.memo("brutelive", d) { r =>
+      // ‖v‖ once per row on each side (r17) — see bruteTop3
+      val q = R12Queries.probeVecs(s, d).select(col("qid"), col("qv"),
+        graft.functions.vec.norm(col("qv")).as("qn"))
+      val cn = R12Queries.corpusVecs(s, d).filter(col("cid") % 7 =!= 0)
+        .select(col("cid"), col("cv"),
+          graft.functions.vec.norm(col("cv")).as("cnv"))
+      top(broadcast(q).crossJoin(cn)
+          .select(col("qid"), col("cid"),
+            (graft.functions.vec.dot(col("qv"), col("cv")) /
+              (col("qn") * col("cnv"))).as("cos")), 3)
+        .select("qid", "cid")
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** the tombstone-era serve beam (q463's exact path: LSH + hub seeds,
     * W=8 × 2 rounds traversing THROUGH tombstones), memoized (tag
     * `tombbeam`) because it is both q463's serve output and q499's
     * comparison leg: whichever runs first pays the beam rounds, the
-    * other reads a probe×W-bounded parquet — the hnswupper contract
+    * other reads a probe×W-bounded parquet ([[Shared.memo]])
     */
   private[operators] def tombstoneBeam(s: SparkSession, d: String)
-      : DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = tombBeamMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("tombbeam") {
-        val r = Shared.scratchRoot("tombbeam", key)
-        Shared.withCheckpointDir(s) {
-          val graph = R12Queries.knnGraphMemoized(s, d)
-          val q = R12Queries.probeVecs(s, d)
-          val seedPairs = R12Queries.probeBandKeys(s, d)
-            .join(R12Queries.bandedCorpusKeys(s, d), Seq("band", "bk"))
-            .select("qid", "cid")
-            .unionAll(q.select("qid")
-              .crossJoin(broadcast(R12Queries.entryPoints(graph))))
-            .distinct()
-          var beam = Shared.pinModelSized(
-            top(R12Queries.beamScore(s, d, seedPairs), 8))
-          for (_ <- 1 to 2) beam = beamRound(s, d, beam, graph, 8)
-          beam.write.mode("overwrite").parquet(r.toString)
-        }
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-  private val tombBeamMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+      : DataFrame =
+    s.read.parquet(Shared.memo("tombbeam", d) { r =>
+      Shared.withCheckpointDir(s) {
+        val graph = R12Queries.knnGraphMemoized(s, d)
+        val q = R12Queries.probeVecs(s, d)
+        val seedPairs = R12Queries.probeBandKeys(s, d)
+          .join(R12Queries.bandedCorpusKeys(s, d), Seq("band", "bk"))
+          .select("qid", "cid")
+          .unionAll(q.select("qid")
+            .crossJoin(broadcast(R12Queries.entryPoints(graph))))
+          .distinct()
+        var beam = Shared.pinModelSized(
+          top(R12Queries.beamScore(s, d, seedPairs), 8))
+        for (_ <- 1 to 2) beam = beamRound(s, d, beam, graph, 8)
+        beam.write.mode("overwrite").parquet(r)
+      }
+      r
+    })
 
   val all: Seq[QueryDef] = Seq(
 

@@ -37,33 +37,25 @@ object R13hQueries {
     * three diagnostics below (and the bench ledger attributes the build
     * to its first payer).
     */
-  private[graft] def subsetKnn(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = subsetKnnMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("subsetknn") {
-        val r = Shared.scratchRoot("subsetknn", key)
-        val sub = Tables.embeddings(s, d)
-          .filter(col("vec_id") >= LO && col("vec_id") < HI)
-          .select(col("vec_id").as("aid"), col("embedding").as("av"),
-            col("label").cast("long").as("albl"))
-        // panel × panel is model-sized by construction (the bounded-
-        // subset regime documented above) — broadcast the right side
-        sub.crossJoin(broadcast(sub.select(col("aid").as("bid"),
-            col("av").as("bv"), col("albl").as("blbl"))))
-          .filter(col("aid") =!= col("bid"))
-          .withColumn("cos", R12Queries.cosCol(col("av"), col("bv")))
-          .withColumn("rk", row_number().over(Window.partitionBy("aid")
-            .orderBy(col("cos").desc, col("bid").asc)).cast("long"))
-          .filter(col("rk") <= K)
-          .select("aid", "albl", "rk", "bid", "blbl")
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-
-  private val subsetKnnMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def subsetKnn(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("subsetknn", d) { r =>
+      val sub = Tables.embeddings(s, d)
+        .filter(col("vec_id") >= LO && col("vec_id") < HI)
+        .select(col("vec_id").as("aid"), col("embedding").as("av"),
+          col("label").cast("long").as("albl"))
+      // panel × panel is model-sized by construction (the bounded-
+      // subset regime documented above) — broadcast the right side
+      sub.crossJoin(broadcast(sub.select(col("aid").as("bid"),
+          col("av").as("bv"), col("albl").as("blbl"))))
+        .filter(col("aid") =!= col("bid"))
+        .withColumn("cos", R12Queries.cosCol(col("av"), col("bv")))
+        .withColumn("rk", row_number().over(Window.partitionBy("aid")
+          .orderBy(col("cos").desc, col("bid").asc)).cast("long"))
+        .filter(col("rk") <= K)
+        .select("aid", "albl", "rk", "bid", "blbl")
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** the oracle's mirror of [[subsetKnn]]: `sub` + `knn` CTE bodies */
   private[operators] val SQL_KNN_CTES: String =

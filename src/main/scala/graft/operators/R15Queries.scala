@@ -512,20 +512,13 @@ object R15Queries {
     * consumers are the serve legs
     */
   private def liveKnnGraph(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = liveKnnMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("knnlive") {
-        val r = Shared.scratchRoot("knnlive", key)
-        R12Queries.knnGraphEdgesOver(
-          R12Queries.corpusVecs(s, d).filter(col("cid") % 7 =!= 0))
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-  private val liveKnnMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+      : org.apache.spark.sql.DataFrame =
+    s.read.parquet(Shared.memo("knnlive", d) { r =>
+      R12Queries.knnGraphEdgesOver(
+        R12Queries.corpusVecs(s, d).filter(col("cid") % 7 =!= 0))
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** the generative 3-frame 16×16 clip every motion-codec query shares:
     * frame fi is the (fi, 2·fi) CYCLIC shift of the base pattern

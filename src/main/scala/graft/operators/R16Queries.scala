@@ -723,40 +723,28 @@ object R16Queries {
     * loop's own verbs (planner counts, attaches, repairs, serves).
     */
   private[operators] def memoBuild(s: SparkSession, d: String, tag: String,
-      live: DataFrame): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = buildMemo.computeIfAbsent(s"$tag/$key", _ =>
-      Shared.timedMemoBuild(tag) {
-        val r = Shared.scratchRoot(tag, key)
-        R12Queries.knnGraphEdgesOver(live)
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-  private val buildMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+      live: DataFrame): DataFrame =
+    s.read.parquet(Shared.memo(tag, d) { r =>
+      R12Queries.knnGraphEdgesOver(live)
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** the pre-churn index state: the initial build over L0 PLUS the A1
     * arrivals attached through its router — pure per dataset, memoized
     * beside the builds (tag `churng1`)
     */
-  private[operators] def churnG1(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = buildMemo.computeIfAbsent(s"churng1/$key", _ =>
-      Shared.timedMemoBuild("churng1") {
-        val r = Shared.scratchRoot("churng1", key)
-        val c = R12Queries.corpusVecs(s, d)
-        val l0 = c.filter(col("cid") % 3 =!= 2)
-        R12Queries.knnGraphEdgesOver(l0)
-          .unionAll(attachEdges(c, c.filter(isA1(col("cid"))),
-            R12Queries.bandedKeysOver(l0)))
-          .distinct()
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
+  private[operators] def churnG1(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("churng1", d) { r =>
+      val c = R12Queries.corpusVecs(s, d)
+      val l0 = c.filter(col("cid") % 3 =!= 2)
+      R12Queries.knnGraphEdgesOver(l0)
+        .unionAll(attachEdges(c, c.filter(isA1(col("cid"))),
+          R12Queries.bandedKeysOver(l0)))
+        .distinct()
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** the mid-loop states (G2 = step-2 maintenance applied to G1; G2i =
     * G2 with the A2 arrivals attached), memoized once per (process,
@@ -769,32 +757,24 @@ object R16Queries {
     */
   private[operators] def churnMid(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val key = Shared.datasetKey(d)
-    // resolve the g1 dependency BEFORE entering computeIfAbsent: a
-    // nested computeIfAbsent on the same map throws "Recursive update"
-    // whenever the two keys land in the same hash bin — which is
-    // dataset-key-dependent, so it surfaced only at sf1 (the memo is
-    // idempotent, so the early resolve costs a map hit when warm)
-    val g1 = churnG1(s, d)
-    val root = buildMemo.computeIfAbsent(s"churnmid/$key", _ =>
-      Shared.timedMemoBuild("churnmid") {
-        val r = Shared.scratchRoot("churnmid", key)
-        val c = R12Queries.corpusVecs(s, d)
-        val cand2 = repairCand(g1, isT1)
-        val l2 = c.filter(col("cid") % 6 =!= 5 && !isT1(col("cid")))
-        val kc2 = R12Queries.bandedKeysOver(l2)
-        val rep2 = cand2.count()
-        val reb2 = pairsOf(kc2).count()
-        val g2 =
-          if (reb2 >= Crossover * rep2) repairGraph(c, g1, cand2, isT1)
-          else R12Queries.knnGraphEdgesOver(l2)
-        g2.write.mode("overwrite").parquet(s"$r/g2")
-        val g2w = s.read.parquet(s"$r/g2")
-        g2w.unionAll(attachEdges(c, c.filter(isA2(col("cid"))), kc2))
-          .distinct()
-          .write.mode("overwrite").parquet(s"$r/g2i")
-        r.toString
-      })
+    val root = Shared.memo("churnmid", d) { r =>
+      val g1 = churnG1(s, d)
+      val c = R12Queries.corpusVecs(s, d)
+      val cand2 = repairCand(g1, isT1)
+      val l2 = c.filter(col("cid") % 6 =!= 5 && !isT1(col("cid")))
+      val kc2 = R12Queries.bandedKeysOver(l2)
+      val rep2 = cand2.count()
+      val reb2 = pairsOf(kc2).count()
+      val g2 =
+        if (reb2 >= Crossover * rep2) repairGraph(c, g1, cand2, isT1)
+        else R12Queries.knnGraphEdgesOver(l2)
+      g2.write.mode("overwrite").parquet(s"$r/g2")
+      val g2w = s.read.parquet(s"$r/g2")
+      g2w.unionAll(attachEdges(c, c.filter(isA2(col("cid"))), kc2))
+        .distinct()
+        .write.mode("overwrite").parquet(s"$r/g2i")
+      r
+    }
     (s.read.parquet(s"$root/g2"), s.read.parquet(s"$root/g2i"))
   }
 
@@ -805,33 +785,26 @@ object R16Queries {
     */
   private[operators] def churnEval(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
-    val key = Shared.datasetKey(d)
-    // the gold build nests on the same memo map — resolve it BEFORE
-    // computeIfAbsent (same recursive-update hazard as churnMid)
-    val cPre = R12Queries.corpusVecs(s, d)
-    val l4Pre = cPre.filter(col("cid") % 3 =!= 0 && !isT3(col("cid")))
-    val gold = memoBuild(s, d, "churngold", l4Pre)
-    val root = buildMemo.computeIfAbsent(s"churneval/$key", _ =>
-      Shared.timedMemoBuild("churneval") {
-        val r = Shared.scratchRoot("churneval", key)
-        val c = R12Queries.corpusVecs(s, d)
-        val q = R12Queries.probeVecs(s, d)
-        val l4 = c.filter(col("cid") % 3 =!= 0 && !isT3(col("cid")))
-          .select(col("cid"), col("cv"),
-            graft.functions.vec.norm(col("cv")).as("cnv"))
-        val qn = q.select(col("qid"), col("qv"),
-          graft.functions.vec.norm(col("qv")).as("qn"))
-        // ‖v‖ once per row on each side (r17) — the bruteTop3 discipline
-        R13Queries.top(
-            l4.crossJoin(broadcast(qn)).select(col("qid"), col("cid"),
-              (graft.functions.vec.dot(col("qv"), col("cv")) /
-                (col("qn") * col("cnv"))).as("cos")), 3)
-          .select("qid", "cid")
-          .write.mode("overwrite").parquet(s"$r/brute")
-        serveAns(s, d, gold, R12Queries.bandedKeysOver(l4))
-          .write.mode("overwrite").parquet(s"$r/ansg")
-        r.toString
-      })
+    val root = Shared.memo("churneval", d) { r =>
+      val c = R12Queries.corpusVecs(s, d)
+      val q = R12Queries.probeVecs(s, d)
+      val live = c.filter(col("cid") % 3 =!= 0 && !isT3(col("cid")))
+      val gold = memoBuild(s, d, "churngold", live)
+      val l4 = live.select(col("cid"), col("cv"),
+        graft.functions.vec.norm(col("cv")).as("cnv"))
+      val qn = q.select(col("qid"), col("qv"),
+        graft.functions.vec.norm(col("qv")).as("qn"))
+      // ‖v‖ once per row on each side (r17) — the bruteTop3 discipline
+      R13Queries.top(
+          l4.crossJoin(broadcast(qn)).select(col("qid"), col("cid"),
+            (graft.functions.vec.dot(col("qv"), col("cv")) /
+              (col("qn") * col("cnv"))).as("cos")), 3)
+        .select("qid", "cid")
+        .write.mode("overwrite").parquet(s"$r/brute")
+      serveAns(s, d, gold, R12Queries.bandedKeysOver(l4))
+        .write.mode("overwrite").parquet(s"$r/ansg")
+      r
+    }
     (s.read.parquet(s"$root/brute"), s.read.parquet(s"$root/ansg"))
   }
 

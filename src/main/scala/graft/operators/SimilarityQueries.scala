@@ -125,25 +125,20 @@ object SimilarityQueries {
     * not data), and re-broadcasting the literals means the 2-iteration
     * training chain executes ONCE instead of once per consumer plan
     * (corpus assignment + query probing would otherwise each recompute
-    * it). The learned parameters memoize per (process, dataset) — the
-    * winnow-memo contract, driver-side because the value is model-sized —
+    * it). The learned parameters memoize per (process, dataset) —
+    * [[Shared.memo]], driver-side because the value is model-sized —
     * so q159's probes, q172's ingest-time layout, and repeat invocations
     * all reuse ONE training run.
     */
   private[graft] def trainedCodebook(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val learned = trainedCodebookMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("codebook")(
-        lloydCentroids(s, d, iters = 2).collect()
+    val learned = Shared.memo("codebook", d) { _ =>
+      lloydCentroids(s, d, iters = 2).collect()
         .map(r => (r.getLong(0), r.getSeq[Double](1)))
-        .sortBy(_._1).toSeq))
+        .sortBy(_._1).toSeq
+    }
     import s.implicits._
     learned.toDF("cent_id", "centv")
   }
-
-  /** dataset dir (normalized) → learned (cent_id, centv) rows, this JVM */
-  private val trainedCodebookMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Seq[Double])]]()
 
   /** Multi-probe IVF top-3 (q151's body, parameterized so QueriesSpec can
     * measure recall across nprobe settings). The candidate set is
@@ -655,8 +650,8 @@ object SimilarityQueries {
       // mechanics are threshold-independent.)
       (s, d) => {
         // The argmax assignment (vid, v, cent_id) materializes ONCE per
-        // (process, dataset) to scratch parquet — the winnowFingerprints
-        // memo contract verbatim. r6 shared it via a repartition exchange
+        // (process, dataset) to scratch parquet via [[Shared.memo]].
+        // r6 shared it via a repartition exchange
         // instead, but the member-count branch broke canonical plan
         // equality (join constraint inference) and silently re-derived
         // the full corpus scan + K-dot-product argmax — a second corpus
@@ -711,7 +706,7 @@ object SimilarityQueries {
       // — the planner never touches the other K-nprobe/K of the corpus
       // files, no runtime cleverness required). This query demonstrates
       // exactly that: the layout materializes once per (process, dataset)
-      // (the winnow-memo contract), the probed centroid ids collect as a
+      // ([[Shared.memo]]), the probed centroid ids collect as a
       // model-sized literal IN filter (≤ K values — the q159-centroid
       // precedent), and the plan shows PartitionFilters on cent_id
       // (PlanSpec-asserted). Results are BY CONSTRUCTION identical to
@@ -1451,18 +1446,17 @@ object SimilarityQueries {
     * `tag`, collect the ≤ nprobe·|queries| probed centroid ids as a
     * model-sized literal IN filter, and exact-re-rank within the probed
     * partitions. The partition filter is STATIC — the plan never touches
-    * the unprobed K−nprobe/K of the corpus files.
+    * the unprobed K−nprobe/K of the corpus files. Tags: "ivfpart" = fixed
+    * seed codebook (q168), "ivfpart_tr" = trained codebook (q172); the
+    * first caller per tag pays the assignment + write ([[Shared.memo]]).
     */
   private def ivfPartitionedProbe(s: SparkSession, d: String, tag: String,
       cents: Option[DataFrame]): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = ivfLayoutMemo.computeIfAbsent(s"$tag:$key", _ =>
-      Shared.timedMemoBuild(tag) {
-      val r = Shared.scratchRoot(tag, key)
+    val root = Shared.memo(tag, d) { r =>
       ivfCorpusAssign(s, d, cents).write.mode("overwrite")
-        .partitionBy("cent_id").parquet(r.toString)
-      r.toString
-    })
+        .partitionBy("cent_id").parquet(r)
+      r
+    }
     val probes = ivfQueryProbes(s, d, nprobe = 2, cents)
     // probed partitions as literals (partition values infer as int)
     val probed = probes.select("cent_id").distinct().collect()
@@ -1478,14 +1472,6 @@ object SimilarityQueries {
       .filter(col("rk") <= 3)
       .select("qid", "cid", "cos", "rk")
   }
-
-  /** "tag:dataset dir" → cent_id-partitioned corpus layout for this JVM
-    * (first caller pays the assignment + write; tags: "ivfpart" = fixed
-    * seed codebook (q168), "ivfpart_tr" = trained codebook (q172),
-    * "ivfpq" = PQ-coded index (q189))
-    */
-  private val ivfLayoutMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** PQ sub-centroid table (cent, m, scv): the M=8 8-dim slices of the
     * K=8 seed vectors — q186's sub-codebooks, shared by the encoder
@@ -1504,18 +1490,14 @@ object SimilarityQueries {
     * seed centroids and PQ-ENCODED AT INGEST — each partition directory
     * stores only (cid, m, code) rows, the 3-byte-per-vector serving
     * index; raw corpus floats never leave the build job. Materialized
-    * once per (process, dataset) under the ivfLayoutMemo contract.
+    * once per (process, dataset) by [[Shared.memo]].
     */
-  private[graft] def ivfPqLayout(s: SparkSession, d: String): String = {
-    val key = Shared.datasetKey(d)
-    ivfLayoutMemo.computeIfAbsent(s"ivfpq:$key", _ =>
-      Shared.timedMemoBuild("ivfpq") {
-        val r = Shared.scratchRoot("ivfpq", key)
-        pqEncode(s, d, ivfCorpusAssign(s, d, None))
-          .write.mode("overwrite").partitionBy("cent_id").parquet(r.toString)
-        r.toString
-      })
-  }
+  private[graft] def ivfPqLayout(s: SparkSession, d: String): String =
+    Shared.memo("ivfpq", d) { r =>
+      pqEncode(s, d, ivfCorpusAssign(s, d, None))
+        .write.mode("overwrite").partitionBy("cent_id").parquet(r)
+      r
+    }
 
   /** The q189/q198 oracle: coarse assignment + PQ codes + ADC from
     * first principles — shared because the incremental index must
@@ -1612,20 +1594,16 @@ object SimilarityQueries {
     * the union. The q189-vs-q198 hash match (same oracle) plus the
     * row-set spec prove append ≡ one-shot rebuild.
     */
-  private[graft] def ivfPqLayoutIncremental(s: SparkSession, d: String): String = {
-    val key = Shared.datasetKey(d)
-    ivfLayoutMemo.computeIfAbsent(s"ivfpq_inc:$key", _ =>
-      Shared.timedMemoBuild("ivfpq_inc") {
-        val r = Shared.scratchRoot("ivfpq_inc", key)
-        pqEncode(s, d, ivfCorpusAssign(s, d, None)
-            .filter(col("cid") % 2 === 1))
-          .write.mode("overwrite").partitionBy("cent_id").parquet(r.toString)
-        pqEncode(s, d, ivfCorpusAssign(s, d, None)
-            .filter(col("cid") % 2 === 0))
-          .write.mode("append").partitionBy("cent_id").parquet(r.toString)
-        r.toString
-      })
-  }
+  private[graft] def ivfPqLayoutIncremental(s: SparkSession, d: String): String =
+    Shared.memo("ivfpq_inc", d) { r =>
+      pqEncode(s, d, ivfCorpusAssign(s, d, None)
+          .filter(col("cid") % 2 === 1))
+        .write.mode("overwrite").partitionBy("cent_id").parquet(r)
+      pqEncode(s, d, ivfCorpusAssign(s, d, None)
+          .filter(col("cid") % 2 === 0))
+        .write.mode("append").partitionBy("cent_id").parquet(r)
+      r
+    }
 
   /** PQ-encode an assigned corpus slice: (cid, cent_id, cv) → one
     * (cid, cent_id, m, code) row per subspace — the shared encoder of
@@ -1666,22 +1644,19 @@ object SimilarityQueries {
   }
 
   /** q126's corpus→centroid argmax assignment (vid, v, cent_id), memoized
-    * to scratch parquet per (process, dataset) — winnowFingerprints memo
-    * contract: first caller pays the one corpus scan + broadcast argmax,
+    * to scratch parquet per (process, dataset) by [[Shared.memo]]: first
+    * caller pays the one corpus scan + broadcast argmax,
     * every consumer reads the scratch. See the q126 scaladoc for why this
     * replaced exchange reuse (the count branch re-derived the corpus
     * pass).
     */
-  private[graft] def semdedupAssigned(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = semdedupAssignMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("semdedup") {
+  private[graft] def semdedupAssigned(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("semdedup", d) { r =>
       val K = 8
       val cent = Tables.embeddings(s, d).filter(col("vec_id") < K)
         .select(col("vec_id").as("cent_id"), col("embedding").as("centv"))
       val w = Window.partitionBy("vid")
         .orderBy(col("__d").desc, col("cent_id").asc)
-      val r = Shared.scratchRoot("semdedup", key)
       embeddings(s, d)
         .select(col("vec_id").as("vid"), col("embedding").as("v"))
         .crossJoin(broadcast(cent))
@@ -1690,13 +1665,7 @@ object SimilarityQueries {
         .filter(col("__rk") === 1)
         .select("vid", "v", "cent_id")
         .write.mode("overwrite").option("compression", "lz4")
-        .parquet(r.toString)
-      r.toString
+        .parquet(r)
+      r
     })
-    s.read.parquet(root)
-  }
-
-  /** dataset dir (normalized) → materialized argmax assignment for this JVM */
-  private val semdedupAssignMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 }

@@ -295,11 +295,9 @@ object TextQueries {
     * becomes a read-side projection, which parquet column pruning serves
     * just as cheaply as the old write-side pruning (wh — one hash per
     * token window, by far the widest column — is only ever decoded for
-    * q152). The memo key is the normalized dataset path, so distinct
-    * inputs never share scratch, and `computeIfAbsent` serializes
-    * concurrent first callers so the write happens exactly once. The
-    * scratch root itself stays pid-scoped (no cross-process races) and is
-    * janitored at JVM exit (Shared.scratchRoot).
+    * q152). [[Shared.memo]] keys it on the dataset, so distinct inputs
+    * never share scratch, and serializes concurrent first callers so the
+    * write happens exactly once.
     *
     * At 100 TB this is a deliberate O(fingerprints) scratch write — the
     * price of a deterministic constant factor on the flagship
@@ -308,48 +306,29 @@ object TextQueries {
     */
   private[graft] def winnowFingerprints(s: SparkSession, d: String,
       keep: Seq[String] = Seq("doc_id", "source", "nwin", "wh", "fps")): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = winnowMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("winnow") {
-        val r = Shared.scratchRoot("winnow", key)
-        winnowLadder(s, d).write.mode("overwrite").option("compression", "lz4")
-          .parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root).select(keep.map(col): _*)
+    s.read.parquet(Shared.memo("winnow", d) { r =>
+      winnowLadder(s, d).write.mode("overwrite").option("compression", "lz4")
+        .parquet(r)
+      r
+    }).select(keep.map(col): _*)
   }
-
-  /** dataset dir (normalized) → materialized ladder path for this JVM */
-  private val winnowMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Winnow near-dup components — q154's pairs transitively closed
     * (Shared.minLabelComponents) — memoized to scratch parquet exactly
     * like the ladder above: q158 (cluster sizes) and q165 (representative
     * election) consume the identical label table, and the fixpoint is the
     * expensive part (checkpointed rounds), so the second consumer reads
-    * a pair-graph-sized parquet instead of re-running it. Same contract
-    * as winnowMemo: key = normalized dataset path, first caller pays,
-    * pid-scoped janitored scratch.
+    * a pair-graph-sized parquet instead of re-running it ([[Shared.memo]]).
     */
-  private[graft] def winnowComponents(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = winnowCompMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("winnowcomp") {
-        val edges = winnowPairs(s, d).select("a", "b")
-        val nodes = edges.select(col("a").as("id"))
-          .union(edges.select(col("b").as("id"))).distinct()
-        val r = Shared.scratchRoot("winnowcomp", key)
-        minLabelComponents(s, nodes, edges)
-          .write.mode("overwrite").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-
-  /** dataset dir (normalized) → materialized component labels for this JVM */
-  private val winnowCompMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def winnowComponents(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("winnowcomp", d) { r =>
+      val edges = winnowPairs(s, d).select("a", "b")
+      val nodes = edges.select(col("a").as("id"))
+        .union(edges.select(col("b").as("id"))).distinct()
+      minLabelComponents(s, nodes, edges)
+        .write.mode("overwrite").parquet(r)
+      r
+    })
 
   /** q154's body — winnow-fingerprint candidate pairs (a, b, n_shared) —
     * exposed so q158 can close them into clusters. See q154's scaladoc
@@ -359,26 +338,16 @@ object TextQueries {
     * table — q154 itself, q158's closure (via [[winnowComponents]]),
     * q165's representative election, and the q166 capstone — and before
     * r9 each re-ran the bucket explode + capped agg + in-bucket pair
-    * HOFs from the fingerprint scratch. Same contract as
-    * [[winnowFingerprints]]: first caller pays one materialization
-    * (attributed to it in the bench's memo ledger), everyone else reads
-    * a pair-graph-sized parquet.
+    * HOFs from the fingerprint scratch. [[Shared.memo]]: first caller
+    * pays one materialization (attributed to it in the bench's memo
+    * ledger), everyone else reads a pair-graph-sized parquet.
     */
-  private[graft] def winnowPairs(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = winnowPairsMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("winnowpairs") {
-        val r = Shared.scratchRoot("winnowpairs", key)
-        winnowPairsLineage(s, d).write.mode("overwrite")
-          .option("compression", "lz4").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-
-  /** dataset key → materialized pair table path for this JVM */
-  private val winnowPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def winnowPairs(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("winnowpairs", d) { r =>
+      winnowPairsLineage(s, d).write.mode("overwrite")
+        .option("compression", "lz4").parquet(r)
+      r
+    })
 
   private[graft] def winnowPairsLineage(s: SparkSession, d: String): DataFrame =
     winnowFingerprints(s, d, Seq("doc_id", "fps"))
@@ -1485,7 +1454,7 @@ object TextQueries {
         // shared starts lineage (doc_id, p, h): materialized ONCE per
         // (process, dataset) and read back as columnar scratch — q170
         // derives the identical table, so both ride [[substrStarts]]
-        // (the winnowFingerprints/semdedupAssigned memo contract).
+        // ([[Shared.memo]]).
         val starts = substrStarts(s, d)
         val dup = starts.groupBy("h")
           .agg(countDistinct(col("doc_id")).as("nd"))
@@ -1815,7 +1784,7 @@ object TextQueries {
       // hard-won rule applies — ReuseExchange can silently fail, so
       // nothing may DEPEND on Catalyst deduping a shared subtree. The
       // bigram table therefore materializes ONCE per (process, dataset)
-      // to scratch parquet (the winnowFingerprints memo contract; the
+      // to scratch parquet ([[Shared.memo]]; the
       // README's "persisted signature table" pattern) and every consumer
       // is a cheap column-pruned scan of that flat table. The vocabulary
       // size V collects eagerly as ONE scalar (bounded model parameter —
@@ -2446,7 +2415,7 @@ object TextQueries {
       //
       // Shape, and why it scales: the tokenize→trigram lineage has many
       // consumers, so it materializes ONCE per (process, dataset) to
-      // scratch parquet ([[trigramTable]] — the bigramTable contract) and
+      // scratch parquet ([[trigramTable]], a [[Shared.memo]]) and
       // every count table is a column-pruned scan of that flat table. The
       // trigram/bigram count tables are Zipf-bounded (≪ corpus) and join
       // on COMPOSITE keys — hash equi-joins whose second key damps the
@@ -3698,38 +3667,45 @@ object TextQueries {
         val langs = langRows.map(_.getString(0)).toSeq
         val nLang = langRows.map(_.getLong(1)).toSeq
         val v = cnts.select("g").distinct().count()
-        // per-trigram score VECTOR (one row per g, one column per lang)
-        // instead of universe × langs rows: the scoring stream then stays
-        // at one row per eval trigram where the crossJoin(langs) form
-        // carried |langs|× that (the 26-CPU-second stage of the before
-        // profile). Scores are the identical integers: an unseen (g,
-        // lang) pair takes (10⁶·(0+1)) div (n_lang+|V|) — exactly the
-        // smoothing floor the old coalesce(ppm, floor) applied, whether
-        // g is in the train universe or not.
-        val modelByG = cnts.groupBy("g").pivot("lang", langs)
-          .agg(sum(col("c")))
-          .select(col("g") +: langs.indices.map(i =>
-            expr(s"""(1000000 * (coalesce(`${langs(i)}`,
-                CAST(0 AS BIGINT)) + 1)) div (${nLang(i)}L + ${v}L)""")
-              .as(s"sc_$i")): _*)
-        val floors = langs.indices.map(i => 1000000L / (nLang(i) + v))
-        val scoredDoc = tri.join(broadcast(modelByG), Seq("g"), "left")
-          .groupBy("doc_id", "true_lang")
-          .agg(sum(coalesce(col("sc_0"), lit(floors(0)))).as("sc_0"),
-            langs.indices.drop(1).map(i =>
-              sum(coalesce(col(s"sc_$i"), lit(floors(i)))).as(s"sc_$i")): _*)
-        val wBest = Window.partitionBy("doc_id")
-          .orderBy(col("score").desc, col("lang").asc)
-        scoredDoc
-          .select(col("doc_id"), col("true_lang"), explode(array(
-            langs.indices.map(i => struct(lit(langs(i)).as("lang"),
-              col(s"sc_$i").cast("long").as("score"))): _*)).as("s"))
-          .select(col("doc_id"), col("true_lang"),
-            col("s.lang").as("lang"), col("s.score").as("score"))
-          .withColumn("rn", row_number().over(wBest))
-          .filter(col("rn") === 1)
-          .groupBy(col("true_lang").as("lang"), col("lang").as("pred_lang"))
-          .agg(count(lit(1)).as("n_docs"))
+        // an empty training split has no language to score against: the
+        // result is empty, as the oracle's `tri CROSS JOIN fl` is
+        if (langs.isEmpty)
+          tri.select(col("true_lang").as("lang"),
+            col("true_lang").as("pred_lang"), lit(0L).as("n_docs")).limit(0)
+        else {
+          // per-trigram score VECTOR (one row per g, one column per lang)
+          // instead of universe × langs rows: the scoring stream then stays
+          // at one row per eval trigram where the crossJoin(langs) form
+          // carried |langs|× that (the 26-CPU-second stage of the before
+          // profile). Scores are the identical integers: an unseen (g,
+          // lang) pair takes (10⁶·(0+1)) div (n_lang+|V|) — exactly the
+          // smoothing floor the old coalesce(ppm, floor) applied, whether
+          // g is in the train universe or not.
+          val modelByG = cnts.groupBy("g").pivot("lang", langs)
+            .agg(sum(col("c")))
+            .select(col("g") +: langs.indices.map(i =>
+              expr(s"""(1000000 * (coalesce(`${langs(i)}`,
+                  CAST(0 AS BIGINT)) + 1)) div (${nLang(i)}L + ${v}L)""")
+                .as(s"sc_$i")): _*)
+          val floors = langs.indices.map(i => 1000000L / (nLang(i) + v))
+          val scoredDoc = tri.join(broadcast(modelByG), Seq("g"), "left")
+            .groupBy("doc_id", "true_lang")
+            .agg(sum(coalesce(col("sc_0"), lit(floors(0)))).as("sc_0"),
+              langs.indices.drop(1).map(i =>
+                sum(coalesce(col(s"sc_$i"), lit(floors(i)))).as(s"sc_$i")): _*)
+          val wBest = Window.partitionBy("doc_id")
+            .orderBy(col("score").desc, col("lang").asc)
+          scoredDoc
+            .select(col("doc_id"), col("true_lang"), explode(array(
+              langs.indices.map(i => struct(lit(langs(i)).as("lang"),
+                col(s"sc_$i").cast("long").as("score"))): _*)).as("s"))
+            .select(col("doc_id"), col("true_lang"),
+              col("s.lang").as("lang"), col("s.score").as("score"))
+            .withColumn("rn", row_number().over(wBest))
+            .filter(col("rn") === 1)
+            .groupBy(col("true_lang").as("lang"), col("lang").as("pred_lang"))
+            .agg(count(lit(1)).as("n_docs"))
+        }
       },
       Some("""WITH tri AS (SELECT doc_id, lang,
                   unnest(list_transform(range(1, CAST(length(text) - 1 AS INT)),
@@ -5419,9 +5395,8 @@ object TextQueries {
     * repeat invocations share ONE training run. Stops early if the
     * vocabulary is fully merged.
     */
-  private[graft] def bpeLearnMerges(s: SparkSession, d: String): Vector[(String, Long)] = {
-    val key = Shared.datasetKey(d)
-    bpeMergesMemo.computeIfAbsent(key, _ => Shared.timedMemoBuild("bpemerges") {
+  private[graft] def bpeLearnMerges(s: SparkSession, d: String): Vector[(String, Long)] =
+    Shared.memo("bpemerges", d) { _ =>
       Shared.withCheckpointDir(s) {
         // CURRENT symbol table, evolved one merge per round (r8 replayed
         // the whole merge list from base every round — fine at 5 merges,
@@ -5467,12 +5442,7 @@ object TextQueries {
         }
         merges
       }
-    })
-  }
-
-  /** dataset dir (normalized) → learned merge list, this JVM */
-  private val bpeMergesMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, Vector[(String, Long)]]()
+    }
 
   /** Symbol array of `sym0` after replaying `merges` in order: the chained
     * greedy-left-to-right `replace` over the wrapped representation,
@@ -5489,9 +5459,9 @@ object TextQueries {
   }
 
   /** Bigram table (doc_id, source, w1, w2) over documents with ≥2 tokens,
-    * materialized once per (process, dataset) to scratch parquet — the
-    * winnowFingerprints memo contract (first caller pays, consumers read
-    * column-pruned parquet; pid-scoped root, janitored at exit). Exists
+    * materialized once per (process, dataset) to scratch parquet by
+    * [[Shared.memo]] (first caller pays, consumers read column-pruned
+    * parquet). Exists
     * because the LM query consumes this lineage three ways and structural
     * single execution beats hoping ReuseExchange fires (q38's lesson).
     * Returns the table plus the TRAIN-split vocabulary size (every token
@@ -5500,9 +5470,7 @@ object TextQueries {
     * extra job for the scalar.
     */
   private[graft] def bigramTable(s: SparkSession, d: String): (DataFrame, Long) = {
-    val key = Shared.datasetKey(d)
-    val (root, v) = bigramMemo.computeIfAbsent(key, _ => Shared.timedMemoBuild("bigram") {
-      val r = Shared.scratchRoot("bigram", key)
+    val (root, v) = Shared.memo("bigram", d) { r =>
       val bg = transform(
         // clamped bounds: generators must never see a partial expression
         // (winnowLadder's rule); the size≥2 filter is the semantic bound,
@@ -5521,19 +5489,15 @@ object TextQueries {
         .select(col("doc_id"), col("source"),
           col("b.w1").as("w1"), col("b.w2").as("w2"))
         .write.mode("overwrite").option("compression", "lz4")
-        .parquet(r.toString)
-      val tr = s.read.parquet(r.toString).filter(col("doc_id") % 2 === 0)
+        .parquet(r)
+      val tr = s.read.parquet(r).filter(col("doc_id") % 2 === 0)
       val vocab = tr.select(col("w1").as("tk"))
         .union(tr.select(col("w2").as("tk")))
         .agg(countDistinct(col("tk"))).head.getLong(0)
-      (r.toString, vocab)
-    })
+      (r, vocab)
+    }
     (s.read.parquet(root), v)
   }
-
-  /** dataset dir (normalized) → (bigram-table path, train |V|), this JVM */
-  private val bigramMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
 
   /** Hashed-feature bucket count of the q188 classifier (fastText's `-hash`
     * bin parameter): the model is ≤ this many rows regardless of corpus
@@ -5583,25 +5547,16 @@ object TextQueries {
     * MEMOIZED to scratch parquet per (process, dataset) — THREE suite
     * queries consume the full scoring pipeline (q188 itself, q202's
     * deciles, q249's AUC) and before r10 each re-ran the train + score
-    * joins from the bigram scratch. Same contract as [[winnowPairs]]:
-    * first caller pays one materialization (attributed in the bench memo
-    * ledger), everyone else reads a doc-grain parquet.
+    * joins from the bigram scratch. [[Shared.memo]]: first caller pays
+    * one materialization (attributed in the bench memo ledger), everyone
+    * else reads a doc-grain parquet.
     */
-  private[graft] def nbScores(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = nbScoresMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("nbscores") {
-        val r = Shared.scratchRoot("nbscores", key)
-        nbScoresBuild(s, d).write.mode("overwrite")
-          .option("compression", "lz4").parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-
-  /** dataset key → materialized score table path for this JVM */
-  private val nbScoresMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def nbScores(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("nbscores", d) { r =>
+      nbScoresBuild(s, d).write.mode("overwrite")
+        .option("compression", "lz4").parquet(r)
+      r
+    })
 
   /** the actual scoring pipeline — see [[nbScores]] */
   private def nbScoresBuild(s: SparkSession, d: String): DataFrame = {
@@ -5640,14 +5595,12 @@ object TextQueries {
   }
 
   /** Trigram table (doc_id, source, w1, w2, w3), materialized once per
-    * (process, dataset) to scratch parquet — the [[bigramTable]] contract
-    * — plus the train-split trigram total N (the q187 unigram-floor
+    * (process, dataset) to scratch parquet by [[Shared.memo]] — plus the
+    * train-split trigram total N (the q187 unigram-floor
     * denominator), collected eagerly as ONE scalar model parameter.
     */
   private[graft] def trigramTable(s: SparkSession, d: String): (DataFrame, Long) = {
-    val key = Shared.datasetKey(d)
-    val (root, n) = trigramMemo.computeIfAbsent(key, _ => Shared.timedMemoBuild("trigram") {
-      val r = Shared.scratchRoot("trigram", key)
+    val (root, n) = Shared.memo("trigram", d) { r =>
       val tg = transform(
         // clamped bounds: generators must never see a partial expression
         // (winnowLadder's rule); the size≥3 filter is the semantic bound
@@ -5666,29 +5619,23 @@ object TextQueries {
         .select(col("doc_id"), col("source"),
           col("g.w1").as("w1"), col("g.w2").as("w2"), col("g.w3").as("w3"))
         .write.mode("overwrite").option("compression", "lz4")
-        .parquet(r.toString)
-      val total = s.read.parquet(r.toString)
+        .parquet(r)
+      val total = s.read.parquet(r)
         .filter(col("doc_id") % 2 === 0).count()
-      (r.toString, total)
-    })
+      (r, total)
+    }
     (s.read.parquet(root), n)
   }
 
-  /** dataset dir (normalized) → (trigram-table path, train N), this JVM */
-  private val trigramMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
   /** Positional postings table (doc_id, p, w) — the inverted-index
     * artifact q193's phrase probes join against, materialized once per
-    * (process, dataset) under the substrStarts contract. p is 1-based
+    * (process, dataset) by [[Shared.memo]]. p is 1-based
     * token position. At 100 TB the production layout buckets this by w
     * so a phrase probe opens only its tokens' buckets; the adjacency
     * join downstream is unchanged.
     */
-  private[graft] def postingsTable(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = postingsMemo.computeIfAbsent(key, _ => Shared.timedMemoBuild("postings") {
-      val r = Shared.scratchRoot("postings", key)
+  private[graft] def postingsTable(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("postings", d) { r =>
       Tables.documents(s, d)
         .withColumn("t", tokens(col("text")))
         .filter(size(col("t")) >= 1)
@@ -5696,20 +5643,14 @@ object TextQueries {
         .select(col("doc_id"), posexplode(col("t")).as(Seq("p0", "w")))
         .select(col("doc_id"), (col("p0") + 1).as("p"), col("w"))
         .write.mode("overwrite").option("compression", "lz4")
-        .parquet(r.toString)
-      r.toString
+        .parquet(r)
+      r
     })
-    s.read.parquet(root)
-  }
-
-  /** dataset dir (normalized) → materialized postings for this JVM */
-  private val postingsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Hashed-3-shingle SET table (doc_id, source, g): each doc's distinct
     * shingles under Shared.h32 — the similarity universe the MinHash
     * family already declares, materialized once per (process, dataset) to
-    * scratch parquet (the [[postingsTable]] memo contract) because the
+    * scratch parquet ([[Shared.memo]]) because the
     * prefix-filter join (q212) consumes this lineage four ways (sizes,
     * document frequencies, prefix ordering, verification) and structural
     * single execution beats hoping ReuseExchange fires. Shingle strings
@@ -5718,21 +5659,12 @@ object TextQueries {
     * source-scoped consumers (q219's containment matrix, q300's
     * decontamination stage) never re-join the corpus for it.
     */
-  private[graft] def shingleSetTable(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = shingleSetMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("shingleset") {
-        val r = Shared.scratchRoot("shingleset", key)
-        withShingles(s, d, nonEmpty = true)
-          .select(col("doc_id"), col("source"), explode(col("sh")).as("w"))
-          .select(col("doc_id"), col("source"), h32(col("w")).as("g"))
-          .distinct()
-          .write.mode("overwrite").option("compression", "lz4")
-          .parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
+  private[graft] def shingleSetTable(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("shingleset", d) { r =>
+      shingleSetBuild(s, d)
+        .write.mode("overwrite").option("compression", "lz4").parquet(r)
+      r
+    })
 
   /** the shingleset memo's build FRAME (un-memoized) — exposed so
     * tools/MemoProfile can time and stage-profile the build in isolation
@@ -5743,10 +5675,6 @@ object TextQueries {
       .select(col("doc_id"), col("source"), h32(col("w")).as("g"))
       .distinct()
 
-  /** dataset dir (normalized) → materialized shingle sets for this JVM */
-  private val shingleSetMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q212's verified pair stream — (d1, d2, sz1, sz2, inter_sz,
     * union_sz) with hashed-shingle Jaccard ≥ 4/5 — extracted so the
     * split assigner (q217), the overlap scorer (q219) and the MinHash
@@ -5755,28 +5683,18 @@ object TextQueries {
     * cross-multiplications; see the q212 QueryDef for the prefix-filter
     * completeness argument.
     *
-    * Materialized once per (process, dataset) to scratch parquet (the
-    * [[shingleSetTable]] memo contract): four queries consume this
+    * Materialized once per (process, dataset) to scratch parquet
+    * ([[Shared.memo]]): four queries consume this
     * lineage, and the prefix window + verify joins are the expensive
     * part of each — first caller pays ~one q212, every other consumer
     * reads a pair-count-sized parquet.
     */
-  private[graft] def jaccardPrefixPairs(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = jpairsMemo.computeIfAbsent(key, _ =>
-      Shared.timedMemoBuild("jpairs") {
-        val r = Shared.scratchRoot("jpairs", key)
-        jaccardPrefixPairsBuild(s, d)
-          .write.mode("overwrite").option("compression", "lz4")
-          .parquet(r.toString)
-        r.toString
-      })
-    s.read.parquet(root)
-  }
-
-  /** dataset dir (normalized) → materialized verified pairs, this JVM */
-  private val jpairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def jaccardPrefixPairs(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("jpairs", d) { r =>
+      jaccardPrefixPairsBuild(s, d)
+        .write.mode("overwrite").option("compression", "lz4").parquet(r)
+      r
+    })
 
   /** the actual pair pipeline — see [[jaccardPrefixPairs]].
     *
@@ -5874,16 +5792,14 @@ object TextQueries {
   /** Exact-substring START table (doc_id, p, h): position p's
     * [[SubstrK]]-token shingle hash per document with ≥ SubstrK tokens —
     * the lineage BOTH q163 (find) and q170 (apply) derive. Materialized
-    * once per (process, dataset) to scratch parquet (the
-    * winnowFingerprints / semdedupAssigned memo contract: first caller
-    * pays the tokenize + hash scan, every consumer reads fixed-width
-    * columnar scratch; pid-scoped root, janitored at exit). Token strings
+    * once per (process, dataset) to scratch parquet ([[Shared.memo]]:
+    * first caller pays the tokenize + hash scan, every consumer reads
+    * fixed-width columnar scratch). Token strings
     * never leave the executors — the scratch carries only (i64, i32, i64)
     * rows, the shuffle- and storage-friendly form at 100 TB.
     */
-  private[graft] def substrStarts(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = substrStartsMemo.computeIfAbsent(key, _ => Shared.timedMemoBuild("substr") {
+  private[graft] def substrStarts(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("substr", d) { r =>
       val K = SubstrK
       // total-by-construction shingle-hash array (clamped bounds) — see
       // the winnowLadder scaladoc for why generators must never see a
@@ -5893,7 +5809,6 @@ object TextQueries {
       val sh = transform(
         sequence(lit(1), greatest(size(col("t")) - (K - 1), lit(1))),
         i => xxhash64(slice(col("t"), i.cast("int"), lit(K))))
-      val r = Shared.scratchRoot("substr", key)
       Tables.documents(s, d)
         .withColumn("t", tokens(col("text")))
         .filter(size(col("t")) >= K)
@@ -5903,28 +5818,19 @@ object TextQueries {
         .filter(col("h").isNotNull)
         .select(col("doc_id"), (col("p0") + 1).as("p"), col("h"))
         .write.mode("overwrite").option("compression", "lz4")
-        .parquet(r.toString)
-      r.toString
+        .parquet(r)
+      r
     })
-    s.read.parquet(root)
-  }
-
-  /** dataset dir (normalized) → materialized starts table for this JVM */
-  private val substrStartsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** BPE base vocabulary (sym0, wcnt): corpus word counts with each word
     * rendered as its wrapped character-symbol string ("(c)(a)(t)") — the
     * representation q171's merge rounds `replace` over. The ONE
     * corpus-sized aggregation of BPE training, materialized per
-    * (process, dataset) under the same scratch-memo contract as
-    * [[bigramTable]]; every merge round then scans vocab-bounded
+    * (process, dataset) by [[Shared.memo]]; every merge round then scans vocab-bounded
     * columnar scratch. Alphanumeric words only — see q171's scaladoc.
     */
-  private[graft] def bpeWords(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = bpeWordsMemo.computeIfAbsent(key, _ => Shared.timedMemoBuild("bpewords") {
-      val r = Shared.scratchRoot("bpewords", key)
+  private[graft] def bpeWords(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("bpewords", d) { r =>
       Tables.documents(s, d)
         .repartition(s.sparkContext.defaultParallelism)
         .select(explode(tokens(col("text"))).as("word"))
@@ -5933,35 +5839,21 @@ object TextQueries {
         .select(regexp_replace(col("word"), "(.)", "($1)").as("sym0"),
           col("wcnt"))
         .write.mode("overwrite").option("compression", "lz4")
-        .parquet(r.toString)
-      r.toString
+        .parquet(r)
+      r
     })
-    s.read.parquet(root)
-  }
-
-  /** dataset dir (normalized) → materialized BPE vocab for this JVM */
-  private val bpeWordsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** SimHash fingerprint table (doc_id, simhash), materialized once per
-    * (process, dataset) to scratch parquet — the substrStarts contract:
+    * (process, dataset) to scratch parquet by [[Shared.memo]]:
     * the per-token-md5 corpus scan runs once; q39/q39b/q80/q174 all read
     * 16-byte columnar rows after that. This is the ingest-time artifact a
     * real deployment stores next to the corpus (fingerprint at write,
     * band-join at dedup time).
     */
-  private[graft] def simhashTable(s: SparkSession, d: String): DataFrame = {
-    val key = Shared.datasetKey(d)
-    val root = simhashMemo.computeIfAbsent(key, _ => Shared.timedMemoBuild("simhash") {
-      val r = Shared.scratchRoot("simhash", key)
+  private[graft] def simhashTable(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(Shared.memo("simhash", d) { r =>
       simhashFingerprints(s, d).write.mode("overwrite")
-        .option("compression", "lz4").parquet(r.toString)
-      r.toString
+        .option("compression", "lz4").parquet(r)
+      r
     })
-    s.read.parquet(root)
-  }
-
-  /** dataset dir (normalized) → materialized fingerprints for this JVM */
-  private val simhashMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 }

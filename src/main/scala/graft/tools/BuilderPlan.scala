@@ -3,12 +3,14 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Dumps `.explain("formatted")` for the INTERNAL memoized builders
-  * (kNN-graph build, planner pair volume, insert attach) that never
+  * (kNN-graph build, planner pair volume, shingle sets, Jaccard pairs,
+  * triangle triples) that never
   * appear in a declared query's plan — the judge-facing evidence when an
   * optimization changes a memo build's internals rather than a query's
   * own frame.
   *
-  * Usage: runMain graft.tools.BuilderPlan knngraph|pairs|attach [...]
+  * Usage: runMain graft.tools.BuilderPlan
+  *   knngraph|pairs|shingleset|jpairs|copurchtri [...]
   */
 object BuilderPlan {
   def main(args: Array[String]): Unit = {

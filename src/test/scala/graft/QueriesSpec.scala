@@ -631,6 +631,24 @@ class QueriesSpec extends AnyFunSuite with SparkFixture {
     assert(m == Map(("aa", "aa") -> 4L, ("zz", "zz") -> 4L), m)
   }
 
+  test("trained language-ID: an empty training split yields an empty " +
+      "confusion matrix with the usual schema, not an exception") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("langid_empty").toString
+    // no even-id document reaches length 3: the even id is too short and
+    // every other document is odd, so the model has no language at all
+    Seq((0L, "ab", "aa"), (1L, "aba bab", "aa"), (3L, "zyz yzy", "zz"))
+      .map { case (id, t, l) => (id, t, l, "s1") }
+      .toDF("doc_id", "text", "lang", "source")
+      .write.parquet(s"$dir/documents.parquet")
+    val out = SparkEntry.queries("q210_langid_trained")(spark, dir)
+    assert(out.schema.map(f => f.name -> f.dataType.simpleString) ==
+      Seq("lang" -> "string", "pred_lang" -> "string", "n_docs" -> "bigint"),
+      out.schema)
+    assert(out.collect().isEmpty)
+  }
+
   test("PMI co-occurrence: a planted high-association pair ranks first") {
     val s = spark
     import s.implicits._
