@@ -210,6 +210,9 @@ object R12Queries {
     * (each bucket's members, ascending, all i<j pairs, distinct across
     * buckets — sort_array on distinct cids reproduces the window's
     * ORDER BY cid enumeration exactly).
+    * Contract: every pair has d1 < d2 — a row repeated in a bucket (a
+    * masked or unioned bucket table) yields no self-pair, as with the
+    * self-join, so the pair set is that of the deduplicated input.
     */
   private[graft] def pairsOfKeyed(keyed: DataFrame): DataFrame =
     keyed.groupBy("band", "bk")
@@ -219,6 +222,7 @@ object R12Queries {
         transform(slice(col("ms"), i + lit(2), size(col("ms"))),
           y => struct(x.as("d1"), y.as("d2")))))).as("p"))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
+      .filter(col("d1") < col("d2"))
       .distinct()
 
   /** [[knnGraphEdges]] over an arbitrary corpus frame (cid, cv) — the

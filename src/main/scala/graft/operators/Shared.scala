@@ -417,7 +417,16 @@ private[graft] object Shared {
     * `.checkpoint()`; the row-count guard makes a mis-use loud.
     */
   def pinModelSized(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
+      : org.apache.spark.sql.DataFrame =
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(collectModelSized(df): _*), df.schema)
+
+  /** Collect a MODEL-SIZED frame to the driver; more than 200,000 rows
+    * fails loudly (IllegalArgumentException) — [[pinModelSized]]'s guard,
+    * and the one driver-side training (BPE's vocabulary) collects under.
+    */
+  def collectModelSized(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.Row] = {
     // ONE-JOB collect, guard AFTER. A take/limit-collect form (the r16
     // advice) would stop shipping rows past the cap, but take's
     // incremental partition scale-up (1 → 4 → 16 → all,
@@ -428,14 +437,13 @@ private[graft] object Shared {
     // misuse guard stays loud through the require below plus the plan
     // specs that pin every call site's frame to a model-sized bound;
     // the OOM-before-require window is accepted deliberately: every
-    // site is ≤ probes×W (≤ a few hundred rows) by construction, and a
+    // site is model-sized (≤ probes×W, or BPE's distinct words), and a
     // bug that unbounds one surfaces at sf0.001 in QueriesSpec long
     // before any driver-sized corpus exists.
     val rows = df.collect()
     require(rows.length <= 200000,
-      s"pinModelSized: ${rows.length} rows — not model-sized; use checkpoint()")
-    df.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), df.schema)
+      s"collectModelSized: ${rows.length} rows — not model-sized; use checkpoint()")
+    rows
   }
 
   /** 32-bit base hash of a string: first 8 md5 hex chars as a Long — the

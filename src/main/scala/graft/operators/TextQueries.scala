@@ -1947,14 +1947,14 @@ object TextQueries {
       // Shape, and why it scales: the ONLY corpus-sized stage is the word
       // count — a hash aggregation with map-side partial combine (the
       // Zipf head collapses per-mapper), memoized to scratch parquet per
-      // (process, dataset) ([[bpeWords]]). Every round after operates on
-      // the DISTINCT-word table (vocab-bounded ≪ corpus), evolved ONE
-      // merge per round and lazily checkpointed so round k costs
-      // O(vocab), not O(k·vocab): a single `replace` projection, pair
-      // explosion weighted by wcnt, a tiny aggregation, and a 1-row
-      // argmax collect — the winning pair is a MODEL PARAMETER (the q159
-      // trained-centroid precedent for driver-side scalars: bounded by
-      // the merge count, never by data).
+      // (process, dataset) ([[bpeWords]]). The DISTINCT-word table it
+      // yields is model-sized (vocab-bounded ≪ corpus), so it is
+      // collected ONCE under the [[Shared.collectModelSized]] row guard
+      // and every round runs on the driver ([[bpeTrain]]): a weighted
+      // pair count, the argmax, one in-memory merge pass, O(vocab) per
+      // round and no Spark job at all — the merge list is a MODEL
+      // PARAMETER (the q159 trained-centroid precedent: bounded by the
+      // merge count, never by data).
       // Words are restricted to alphanumeric ([A-Za-z0-9]+) so the
       // wrapper delimiters can never collide with symbol bytes —
       // punctuation-bearing "words" are noise for tokenizer induction
@@ -1987,8 +1987,9 @@ object TextQueries {
       //
       // Shape, and why it scales: base-charset measurement is one
       // aggregation over the vocab-bounded word memo (never the corpus);
-      // training costs are q171's (each round O(vocab), lazily
-      // checkpointed); the emitted table is model-sized.
+      // training costs are q171's (one guarded vocabulary collect, then
+      // driver-side rounds, each O(vocab)); the emitted table is
+      // model-sized.
       (s, d) => {
         import s.implicits._
         val extraSyms = 32
@@ -2268,8 +2269,9 @@ object TextQueries {
       // tokenizer build ends with: word count, pre-BPE symbol (char)
       // count, post-BPE token count, and the merged symbol vocabulary
       // size. Everything here is vocab-bounded (the corpus-sized word
-      // count is [[bpeWords]]' memoized scratch); the two tiny aggregates
-      // join as a 1-row broadcast.
+      // count is [[bpeWords]]' memoized scratch; training is one guarded
+      // collect of it plus driver-side rounds, see q171); the two tiny
+      // aggregates join as a 1-row broadcast.
       (s, d) => {
         val merged = bpeMergedSymsCol(bpeLearnMerges(s, d))
         val arr0 = split(col("sym0").substr(lit(2), length(col("sym0")) - 2),
@@ -5323,11 +5325,6 @@ object TextQueries {
     */
   private final val BpeMerges = 50
 
-  /** Lazy-checkpoint cadence of the merge loop: bounds the evolved
-    * symbol table's plan depth at this many chained `replace`s.
-    */
-  private final val BpeCheckpointEvery = 8
-
   /** q181's training-sequence token budget (compile-time: `val all`
     * reads it during object init). 512 keeps the sequence count
     * corpus-proportional at every test sf; a production run sets its
@@ -5385,70 +5382,57 @@ object TextQueries {
        $union"""
   }
 
-  /** Learn the first [[BpeMerges]] BPE merges — q171's training loop,
-    * extracted so q175 applies the same model: each round replays the
-    * merges so far onto the memoized base vocabulary ([[bpeWords]]) as a
-    * chained `replace` projection, counts adjacent symbol pairs weighted
-    * by word frequency, and collects the 1-row argmax (count desc, pair
-    * asc). The learned list memoizes per (process, dataset) — model
-    * parameters, the trainedCodebook precedent — so q171, q175, and
-    * repeat invocations share ONE training run. Stops early if the
-    * vocabulary is fully merged.
+  /** Learn the first [[BpeMerges]] BPE merges — q171's training, shared
+    * with q175/q271/q440: ONE guarded collect ([[Shared.collectModelSized]])
+    * of the memoized base vocabulary ([[bpeWords]]), then every round on
+    * the driver ([[bpeTrain]]). The learned list memoizes per (process,
+    * dataset) — model parameters, the trainedCodebook precedent.
     */
   private[graft] def bpeLearnMerges(s: SparkSession, d: String): Vector[(String, Long)] =
     Shared.memo("bpemerges", d) { _ =>
-      Shared.withCheckpointDir(s) {
-        // CURRENT symbol table, evolved one merge per round (r8 replayed
-        // the whole merge list from base every round — fine at 5 merges,
-        // quadratic at a real vocab budget); a lazy checkpoint every
-        // [[BpeCheckpointEvery]] rounds (the pageRankConverged fixpoint
-        // precedent) bounds plan depth so round k costs O(vocab), not
-        // O(k · vocab)
-        // the vocab table is tiny next to the corpus (Zipf: sf0.1's 5k
-        // docs → ~40k distinct words); 50 rounds of 32-partition jobs
-        // would be pure scheduler overhead, so pack it into a few
-        // partitions — at a REAL vocab (hundreds of millions of words)
-        // drop the coalesce and let the rounds run wide
-        var cur = bpeWords(s, d).select(col("sym0").as("sym"), col("wcnt"))
-          .coalesce(4)
-        var merges = Vector.empty[(String, Long)] // ("a b", n)
-        var done = false
-        while (!done && merges.size < BpeMerges) {
-          val l = split(col("sym").substr(lit(2), length(col("sym")) - 2),
-            "\\)\\(")
-          val top = cur.select(l.as("l"), col("wcnt"))
-            .filter(size(col("l")) >= 2)
-            .select(col("wcnt"), explode(transform(
-              sequence(lit(1), size(col("l")) - 1),
-              i => concat(element_at(col("l"), i.cast("int")), lit(" "),
-                element_at(col("l"), (i + lit(1)).cast("int"))))).as("pair"))
-            .groupBy("pair").agg(sum(col("wcnt")).as("n"))
-            // CONVERGENCE stop, mirrored in the oracle's t_k: a pair seen
-            // once compresses nothing — the standard BPE termination —
-            // so training ends at whichever comes first, budget or this
-            .filter(col("n") >= 2)
-            .orderBy(col("n").desc, col("pair").asc)
-            .limit(1).collect()
-          if (top.isEmpty) done = true // converged (or fully merged)
-          else {
-            val pair = top(0).getString(0)
-            merges :+= ((pair, top(0).getLong(1)))
-            val Array(a, b) = pair.split(" ", 2)
-            cur = cur.withColumn("sym",
-              replace(col("sym"), lit(s"($a)($b)"), lit(s"($a$b)")))
-            if (merges.size % BpeCheckpointEvery == 0)
-              cur = cur.checkpoint(eager = false)
+      bpeTrain(Shared.collectModelSized(bpeWords(s, d))
+        .map(r => (r.getString(0), r.getLong(1))), BpeMerges)
+    }
+
+  /** BPE training over an in-memory vocabulary (sym0 "(c)(a)(t)", wcnt),
+    * up to `budget` merges. Each round counts adjacent symbol pairs
+    * weighted by wcnt, keeps those seen n ≥ 2 times (CONVERGENCE stop,
+    * mirrored in the oracle's t_k: a pair seen once compresses nothing),
+    * takes the argmax (n desc, "a b" asc — words are ASCII alphanumeric,
+    * so String order is the oracle's byte order) and merges greedily left
+    * to right without overlap: what `replace` of "(a)(b)" by "(ab)" does
+    * on the wrapped string in both engines.
+    */
+  private[graft] def bpeTrain(vocab: Seq[(String, Long)], budget: Int): Vector[(String, Long)] = {
+    var words = vocab.map { case (sym0, n) =>
+      (sym0.substring(1, sym0.length - 1).split("\\)\\(").toList, n) }
+    var merges = Vector.empty[(String, Long)] // ("a b", n)
+    var done = false
+    while (!done && merges.size < budget) {
+      words.flatMap { case (l, n) => l.zip(l.tail).map { case (a, b) => (s"$a $b", n) } }
+        .groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 >= 2)
+        .minByOption { case (pair, n) => (-n, pair) } match {
+        case None => done = true // converged (or fully merged)
+        case Some((pair, n)) =>
+          merges :+= ((pair, n))
+          val Array(a, b) = pair.split(" ", 2)
+          @annotation.tailrec // a word may be one long alphanumeric run
+          def merge(l: List[String], out: List[String]): List[String] = l match {
+            case `a` :: `b` :: rest => merge(rest, (a + b) :: out)
+            case x :: rest => merge(rest, x :: out)
+            case Nil => out.reverse
           }
-        }
-        merges
+          words = words.map { case (l, n) => (merge(l, Nil), n) }
       }
     }
+    merges
+  }
 
   /** Symbol array of `sym0` after replaying `merges` in order: the chained
     * greedy-left-to-right `replace` over the wrapped representation,
-    * unwrapped and split — the single definition of "apply the model"
-    * that training rounds (pair counting) and q175 (tokenization audit)
-    * both use.
+    * unwrapped and split — "apply the model" as a Spark projection, the
+    * one q175 (tokenization audit) and q271 (fertility) use; its
+    * per-word result matches [[bpeTrain]]'s merge rule.
     */
   private[graft] def bpeMergedSymsCol(merges: Seq[(String, Long)]): org.apache.spark.sql.Column = {
     val sym = merges.foldLeft(col("sym0")) { case (c, (pair, _)) =>
@@ -5826,8 +5810,8 @@ object TextQueries {
     * rendered as its wrapped character-symbol string ("(c)(a)(t)") — the
     * representation q171's merge rounds `replace` over. The ONE
     * corpus-sized aggregation of BPE training, materialized per
-    * (process, dataset) by [[Shared.memo]]; every merge round then scans vocab-bounded
-    * columnar scratch. Alphanumeric words only — see q171's scaladoc.
+    * (process, dataset) by [[Shared.memo]]; training then collects this
+    * vocab-bounded table once. Alphanumeric words only — see q171's scaladoc.
     */
   private[graft] def bpeWords(s: SparkSession, d: String): DataFrame =
     s.read.parquet(Shared.memo("bpewords", d) { r =>

@@ -103,6 +103,26 @@ class QueriesSpec extends AnyFunSuite with SparkFixture {
       s"expected a deep run inside the budget, got ${m1.size} merges")
   }
 
+  test("BPE on a corpus with no alphanumeric word: no merges, empty q171/q440, no exception") {
+    import graft.operators.TextQueries
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("bpe_empty").toString
+    Seq((1L, "-- ?? !!", "s1"), (2L, "!! --", "s1"))
+      .toDF("doc_id", "text", "source").write.parquet(s"$dir/documents.parquet")
+    assert(TextQueries.bpeLearnMerges(spark, dir) == Vector.empty)
+    assert(SparkEntry.queries("q171_bpe_merge_learn")(spark, dir).collect().isEmpty)
+    assert(SparkEntry.queries("q440_bpe_vocab_target")(spark, dir).collect().isEmpty)
+  }
+
+  test("model-sized guard: collecting or pinning 200,001 rows fails loudly") {
+    import graft.operators.Shared
+    val big = spark.range(200001).toDF
+    intercept[IllegalArgumentException](Shared.collectModelSized(big))
+    intercept[IllegalArgumentException](Shared.pinModelSized(big))
+    assert(Shared.collectModelSized(spark.range(3).toDF).length == 3)
+  }
+
   test("PQ ADC: every packed code fits 24 bits; ADC ranking recalls exact-dot neighbors") {
     val rows = SparkEntry.queries("q186_ann_pq_adc")(spark, sf).collect()
     assert(rows.nonEmpty)

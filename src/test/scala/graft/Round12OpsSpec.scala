@@ -29,6 +29,21 @@ class Round12OpsSpec extends AnyFunSuite with SparkFixture {
     assert(edges.length <= 2 * 6 * nodes, s"${edges.length} edges, $nodes nodes")
   }
 
+  test("pairsOfKeyed: a duplicated keyed row yields no self-pair and the same pair set") {
+    val s = spark
+    import s.implicits._
+    val keyed = Seq((1L, 0, 7L), (2L, 0, 7L), (3L, 0, 7L), (2L, 1, 9L), (4L, 1, 9L))
+      .toDF("cid", "band", "bk")
+    def pairs(k: org.apache.spark.sql.DataFrame) =
+      operators.R12Queries.pairsOfKeyed(k).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val clean = pairs(keyed)
+    val dup = pairs(keyed.union(Seq((2L, 0, 7L)).toDF("cid", "band", "bk")))
+    assert(clean == Set((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L)), clean)
+    assert(dup.forall { case (a, b) => a != b }, s"self-pair emitted: $dup")
+    assert(dup == clean)
+  }
+
   test("q439: recall@3 monotone in beam width; the wide beam recovers the brute top-3") {
     val out = run("q439_ann_knn_graph").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
