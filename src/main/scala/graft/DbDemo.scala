@@ -13,12 +13,7 @@ import org.apache.spark.sql.types._
   */
 object DbDemo {
   def main(args: Array[String]): Unit = {
-    implicit val spark: SparkSession = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    implicit val spark: SparkSession = GraftSession.local()
 
     val eventsSchema = StructType(Seq(
       StructField("event", StringType, nullable = false),

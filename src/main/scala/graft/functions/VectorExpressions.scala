@@ -1,9 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions.sqrt
 import org.apache.spark.sql.graftshim.VectorDot
 
@@ -52,20 +49,4 @@ object bloom {
   /** Membership probe against a `lit(bytes)` filter; no false negatives. */
   def mightContain(hashed: Column, filter: Column): Column =
     org.apache.spark.sql.graftshim.BloomBridge.mightContain(hashed, filter)
-}
-
-/** Session extension (`spark.sql.extensions=graft.functions.GraftExtensions`)
-  * registering `vec_dot` for SQL-text users and the range-join rewrite rule
-  * ([[graft.plans.RangeJoinRule]], inert until its bucket-width conf is
-  * set). The Column API above works without registration.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VectorDot].getName, "vec_dot"),
-      (children: Seq[Expression]) => VectorDot(children.head, children(1))))
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinRule())
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-  }
 }

@@ -3,11 +3,11 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Named handles on the internal memoized builder FRAMES (un-memoized
-  * form), so tools/BuilderPlan can dump their plans — the private[...]
-  * builders are not reachable from graft.tools directly.
+  * form), so `graft.tools.Profile` can time them and dump their plans —
+  * the private[...] builders are not reachable from graft.tools directly.
   */
 object BuilderPlans {
-  def apply(name: String): (SparkSession, String) => DataFrame = name match {
+  val byName: PartialFunction[String, (SparkSession, String) => DataFrame] = {
     case "knngraph" => (s, d) =>
       R12Queries.knnGraphEdgesOver(R12Queries.corpusVecs(s, d))
     case "pairs" => (s, d) =>
@@ -17,6 +17,5 @@ object BuilderPlans {
     case "jpairs" => (s, d) => TextQueries.jaccardPrefixPairsBuild(s, d)
     case "copurchtri" => (s, d) =>
       GraphQueries.triangleTriplesBuild(s, d, useBloom = false)
-    case other => throw new IllegalArgumentException(s"unknown builder: $other")
   }
 }

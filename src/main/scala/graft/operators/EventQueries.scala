@@ -209,7 +209,7 @@ object EventQueries {
       // the tagged-union window: `AsOfJoinNode` → `AsOfJoinStrategy` →
       // `AsOfJoinExec` (graft.plans — the custom-operator ladder's last
       // rung: logical node + planner strategy + SparkPlan, registered at
-      // runtime via extraStrategies / GraftExtensions). The exec declares
+      // runtime via extraStrategies by AsOfBridge). The exec declares
       // hash clustering + (key, ts) ordering and EnsureRequirements
       // plans the exchanges and sorts; each co-partition pair then
       // merges in ONE linear pass with O(1) state — no union

@@ -45,42 +45,40 @@ object GraphQueries {
     */
   private[graft] def pageRankConverged(edges0: DataFrame,
       maxIters: Int = 50): (DataFrame, Int, Boolean) = {
-    val s = edges0.sparkSession
-    if (s.sparkContext.getCheckpointDir.isEmpty)
-      s.sparkContext.setCheckpointDir(
-        sys.props("java.io.tmpdir") + "/graft-checkpoints")
-    val edges = edges0.checkpoint()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .checkpoint()
-    val n = deg.count()
-    require(n > 0, "pageRankConverged: empty graph")
-    val base = (15L * S) / (100L * n)
-    var ranks = deg.select(col("src").as("node"), lit(S / n).as("r"))
-      .checkpoint()
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIters) {
-      val next = edges
-        .join(deg, "src")
-        .join(ranks, col("src") === col("node"))
-        .select(col("dst"), expr("r div outdeg").as("c"))
-        .groupBy("dst")
-        .agg(sum(col("c")).as("cs"))
-        .select(col("dst").as("node"),
-          (lit(base) + expr("(85 * cs) div 100")).as("r"))
+    Shared.withCheckpointDir(edges0.sparkSession) {
+      val edges = edges0.checkpoint()
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("outdeg"))
         .checkpoint()
-      // exact termination probe: any node whose integer rank moved?
-      // limit(1) short-circuits — the probe job stops at the first
-      // changed row rather than counting them all
-      val changed = next
-        .join(ranks.withColumnRenamed("r", "r_prev"), "node")
-        .filter(col("r") =!= col("r_prev"))
-        .limit(1).count()
-      converged = changed == 0L
-      ranks = next
-      it += 1
+      val n = deg.count()
+      require(n > 0, "pageRankConverged: empty graph")
+      val base = (15L * S) / (100L * n)
+      var ranks = deg.select(col("src").as("node"), lit(S / n).as("r"))
+        .checkpoint()
+      var it = 0
+      var converged = false
+      while (!converged && it < maxIters) {
+        val next = edges
+          .join(deg, "src")
+          .join(ranks, col("src") === col("node"))
+          .select(col("dst"), expr("r div outdeg").as("c"))
+          .groupBy("dst")
+          .agg(sum(col("c")).as("cs"))
+          .select(col("dst").as("node"),
+            (lit(base) + expr("(85 * cs) div 100")).as("r"))
+          .checkpoint()
+        // exact termination probe: any node whose integer rank moved?
+        // limit(1) short-circuits — the probe job stops at the first
+        // changed row rather than counting them all
+        val changed = next
+          .join(ranks.withColumnRenamed("r", "r_prev"), "node")
+          .filter(col("r") =!= col("r_prev"))
+          .limit(1).count()
+        converged = changed == 0L
+        ranks = next
+        it += 1
+      }
+      (ranks, it, converged)
     }
-    (ranks, it, converged)
   }
 
   val all: Seq[QueryDef] = Seq(
@@ -91,15 +89,12 @@ object GraphQueries {
       // distinct trading pair, directed both ways so every node has in-
       // and out-degree ≥ 1 — no dangling-mass handling needed). Node ids
       // disambiguate the two key spaces by parity.
-      (s, d) => {
+      (s, d) => Shared.withCheckpointDir(s) {
         // loop-invariant tables are RELIABLY checkpointed once (the q73
         // discipline): without it the final action's lineage contains the
         // orders⋈lineitem-distinct subtree once per iteration per consumer
         // — measured 3× slower — and localCheckpoint would trade that for
         // executor-loss fragility
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(
-            sys.props("java.io.tmpdir") + "/graft-checkpoints")
         val e0 = Tables.orders(s, d).select("o_orderkey", "o_custkey")
           .join(Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
             col("o_orderkey") === col("l_orderkey"))

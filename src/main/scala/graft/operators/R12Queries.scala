@@ -69,12 +69,10 @@ object R12Queries {
   private[operators] def corpusVecs(s: SparkSession, d: String): DataFrame =
     embAll(s, d).filter(col("vec_id") >= 5)
       .select(col("vec_id").as("cid"), col("embedding").as("cv"))
-  /** corpus frame WITHOUT the round-robin repartition (r17): the serve
-    * path (beamScore) streams the scan past BROADCAST pair lists, so
-    * the full-corpus exchange [[embAll]] pays to spread BUILD-side
-    * band-key compute was, on every beam leg, a shuffle of every
-    * corpus float for nothing — scan-split parallelism is the right
-    * grain there at any scale
+  /** Corpus frame without [[embAll]]'s round-robin repartition. Its one
+    * consumer, beamScore, only streams the scan past broadcast pair
+    * lists, so the scan's own splits already give enough parallelism
+    * and a full-corpus shuffle would buy nothing.
     */
   private[operators] def corpusVecsNarrow(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d).filter(col("vec_id") >= 5)

@@ -462,10 +462,7 @@ object R16Queries {
       // survivor set checkpointed at each step so the lineage stays
       // flat. AQE sizes the shrinking side down round over round; at
       // 100× the first round dominates and is exactly a degree filter.
-      (s, d) => {
-        if (s.sparkContext.getCheckpointDir.isEmpty)
-          s.sparkContext.setCheckpointDir(
-            sys.props("java.io.tmpdir") + "/graft-checkpoints")
+      (s, d) => Shared.withCheckpointDir(s) {
         val e0 = graft.Tables.orders(s, d).select("o_orderkey", "o_custkey")
           .join(graft.Tables.lineitem(s, d).select("l_orderkey", "l_suppkey"),
             col("o_orderkey") === col("l_orderkey"))

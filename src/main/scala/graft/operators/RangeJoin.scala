@@ -23,9 +23,6 @@ import org.apache.spark.sql.functions._
   * emitted exactly once because the point side owns exactly one bucket.
   * Cost: shuffle O(|L| + |R|·span/w) instead of compare O(|L|·|R|); pick
   * `w` near the typical interval span so the explode factor stays ~2.
-  *
-  * [[graft.plans.RangeJoinRule]] applies this rewrite automatically to
-  * eligible logical joins; this operator is the explicit library form.
   */
 object RangeJoin {
 

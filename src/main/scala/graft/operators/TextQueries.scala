@@ -5651,7 +5651,8 @@ object TextQueries {
     })
 
   /** the shingleset memo's build FRAME (un-memoized) — exposed so
-    * tools/MemoProfile can time and stage-profile the build in isolation
+    * `graft.tools.Profile` can time and stage-profile the build in
+    * isolation
     */
   private[operators] def shingleSetBuild(s: SparkSession, d: String): DataFrame =
     withShingles(s, d, nonEmpty = true)

@@ -11,10 +11,8 @@ import graft.plans.{AsOfJoinNode, AsOfJoinStrategy}
 /** DataFrame facade for the custom sorted-merge as-of join
   * ([[graft.plans.AsOfJoinExec]]): builds the custom logical node over
   * two ANALYZED child plans and registers [[AsOfJoinStrategy]] on the
-  * session (idempotently, via `spark.experimental.extraStrategies` — the
-  * same runtime-registration path RangeJoinSpec uses for the optimizer
-  * rule; `spark.sql.extensions=graft.functions.GraftExtensions` also
-  * registers it at session build). Lives in the sql package for
+  * session at this use site (idempotently, via
+  * `spark.experimental.extraStrategies`). Lives in the sql package for
   * `Dataset.ofRows` (the BloomBridge/VectorDot shim pattern).
   *
   * Contract: all four key/ts columns are LongType (pack wider keys

@@ -5,12 +5,11 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.RangeJoin
-import graft.plans.RangeJoinRule
 
-/** Bucketized range join: the library operator and the optimizer rule must
-  * both produce exactly the rows of the naive theta join (which Spark plans
-  * as BroadcastNestedLoopJoin), and the rule's rewrite must eliminate the
-  * nested loop from the plan.
+/** Bucketized range join: the library operators (point-in-interval and
+  * interval-overlap) must produce exactly the rows of the naive theta join
+  * (which Spark plans as BroadcastNestedLoopJoin), each matching pair
+  * once, for bucket widths below, at and above the interval span.
   */
 class RangeJoinSpec extends AnyFunSuite with SparkFixture {
 
@@ -75,49 +74,6 @@ class RangeJoinSpec extends AnyFunSuite with SparkFixture {
         .select("eu", "vu").collect().map(x => (x.getLong(0), x.getLong(1)))
       assert(got.length == naive.length, s"width=$w: dupes or misses")
       assert(got.toSet == naive.toSet, s"width=$w")
-    }
-  }
-
-  test("optimizer rule rewrites the theta join and matches its rows") {
-    val (p, i) = pointsAndIntervals
-    val before = naive(p, i).queryExecution.executedPlan.toString
-    assert(before.contains("BroadcastNestedLoopJoin"),
-      s"expected the naive plan to nested-loop:\n$before")
-    val expected = rows(naive(p, i))
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RangeJoinRule()
-    try withConf("spark.graft.rangeJoin.bucketWidth" -> "900000000") {
-      val q = naive(p, i)
-      val plan = q.queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoopJoin") &&
-        !plan.contains("CartesianProduct"),
-        s"rule did not eliminate the nested loop:\n$plan")
-      assert(plan.contains("__rj_bucket"), s"bucket key missing:\n$plan")
-      assert(rows(q) == expected)
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_.isInstanceOf[RangeJoinRule])
-    }
-  }
-
-  test("rule leaves equi-keyed and unconfigured joins alone") {
-    val (p, i) = pointsAndIntervals
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ RangeJoinRule()
-    try {
-      // no bucket width configured ⇒ inert
-      val plan0 = naive(p, i).queryExecution.executedPlan.toString
-      assert(!plan0.contains("__rj_bucket"))
-      withConf("spark.graft.rangeJoin.bucketWidth" -> "900000000") {
-        // an equi conjunct means JoinSelection already hash-joins
-        val eq = p.join(i, col("view_id") === col("iuser") &&
-          col("tus") >= col("istart") && col("tus") <= col("iend"))
-        val plan1 = eq.queryExecution.executedPlan.toString
-        assert(!plan1.contains("__rj_bucket"), plan1)
-      }
-    } finally {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations.filterNot(_.isInstanceOf[RangeJoinRule])
     }
   }
 }

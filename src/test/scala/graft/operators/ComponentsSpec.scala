@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Direct contract tests for [[Shared.minLabelComponents]] — the
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a pure query-level oracle can't isolate (isolated nodes, multi-edges,
   * self-loops, reversed duplicates).
   */
-class ComponentsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.ui.enabled", "false")
-    .appName("components-spec")
-    .getOrCreate()
+class ComponentsSpec extends AnyFunSuite with graft.SparkFixture {
 
   private def components(
       nodeIds: Seq[Long], edgePairs: Seq[(Long, Long)]): Map[Long, Long] = {
