@@ -1,6 +1,8 @@
 package graft.catalog
 
-import java.nio.file.{Files, Paths, Path}
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 
 import scala.jdk.CollectionConverters._
 
@@ -25,7 +27,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     top via Catalyst.
   *
   * Storage mapping (SURVEY.md §1.3): each table is a directory of Parquet
-  * files with LZ4-compressed column chunks — the same capability set as the
+  * files, and its `_snapshot.json` manifest is the only record of which of
+  * them are committed (every write verb commits through `commit`). The
+  * files carry LZ4-compressed column chunks — the same capability set as the
   * reference's per-column `.data`/`.index` block files (columnar layout,
   * per-block compression, per-column min/max zone maps) supplied natively by
   * the format. The reference's sort-order contract (`README.md:44`: rows
@@ -41,58 +45,51 @@ final class DB private (val root: Path, val spark: SparkSession) {
 
   private def tableDir(name: String): Path = root.resolve(name)
 
+  private def schemaOf(name: String): StructType = tables.getOrElse(name,
+    throw new IllegalArgumentException(s"Table not found: $name"))
+
   /** Schema-enforced scan of a table — delivers the reference's projected
     * scan (O10) and full scan (O11) plus the declared prune/filter pipeline
-    * (D1-D3) through Catalyst; see SURVEY.md §4.
+    * (D1-D3) through Catalyst; see SURVEY.md §4. The table is exactly the
+    * files its manifest commits; a table that never committed is empty.
     */
-  def table(name: String): DataFrame = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
+  def table(name: String): DataFrame =
+    read(name, snapshotFiles(name).getOrElse(Nil))
+
+  /** TIME TRAVEL: the table exactly as manifest `version` committed it.
+    * Valid until [[expireSnapshots]] drops the version.
+    */
+  def tableAsOf(name: String, version: Long): DataFrame =
+    read(name, snapshotFilesAsOf(name, version).getOrElse(
+      throw new IllegalArgumentException(
+        s"No retained snapshot v$version for table '$name' " +
+          s"(retained: ${snapshotVersions(name).mkString(", ")})")))
+
+  /** The one read path: `files` (manifest-relative) under the declared
+    * schema. basePath keeps partition-column inference (and PartitionFilters
+    * pruning) for directory-partitioned layouts, which surface partition
+    * columns LAST — the select pins the declared order so positional access
+    * never depends on the physical layout.
+    */
+  private def read(name: String, files: Seq[String]): DataFrame = {
+    val schema = schemaOf(name)
     val dir = tableDir(name)
-    snapshotFiles(name) match {
-      // snapshot-committed table (see upsertPartitioned): the manifest IS
-      // the table — files on disk outside it are uncommitted or
-      // superseded and must stay invisible. basePath keeps partition-
-      // column inference (and PartitionFilters pruning) identical to the
-      // whole-directory read.
-      case Some(files) if files.nonEmpty =>
-        spark.read.option("basePath", dir.toString).schema(schema)
-          .parquet(files.map(f => dir.resolve(f).toString): _*)
-          .select(schema.fieldNames.map(col): _*)
-      case Some(_) =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case None if Files.exists(dir) =>
-        spark.read.schema(schema).parquet(dir.toString)
-          // directory-partitioned layouts surface partition columns LAST
-          // regardless of the requested schema; pin the declared order so
-          // positional access never depends on the physical layout
-          .select(schema.fieldNames.map(col): _*)
-      case None =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    }
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.option("basePath", dir.toString).schema(schema)
+      .parquet(files.map(f => dir.resolve(f).toString): _*)
+      .select(schema.fieldNames.map(col): _*)
   }
 
-  // ── snapshot manifest (old-or-new commit for partition-grain merges) ──
-  /** `_snapshot.json` — the per-table snapshot pointer [[upsertPartitioned]]
-    * commits through (underscore prefix: Spark's directory reader already
-    * ignores it as metadata). Holds the relative paths of every CURRENT
-    * data file; absent for tables that only ever saw whole-directory
-    * operations (their single-swap semantics need no manifest).
+  // ── snapshot manifest: the only record of a table's files ──────────────
+  /** `_snapshot.json` — the per-table pointer every write verb commits
+    * through [[commit]]. Holds the relative paths of every committed data
+    * file; any other parquet file in the table dir is uncommitted residue.
+    * Absent only for a table that has never committed (it reads as empty).
     */
   private def snapshotPath(name: String): Path =
     tableDir(name).resolve("_snapshot.json")
 
-  /** current committed file set, or None when the table has no manifest */
-  private[graft] def snapshotFiles(name: String): Option[Seq[String]] = {
-    val p = snapshotPath(name)
-    if (!Files.exists(p)) None
-    else {
-      val doc = new ObjectMapper().readTree(Files.readString(p))
-      Some(doc.get("files").elements().asScala.map(_.asText()).toSeq)
-    }
-  }
-
-  // ── snapshot HISTORY (time travel / Iceberg-style retention) ─────────
   /** `_snapshots/vN.json` — one retained manifest per committed version.
     * Written BEFORE the pointer swap (a crash in between leaves an
     * orphan history file one version ahead of the pointer; the next
@@ -105,66 +102,61 @@ final class DB private (val root: Path, val spark: SparkSession) {
   private def historyDir(name: String): Path =
     tableDir(name).resolve("_snapshots")
 
-  /** retained snapshot versions, ascending (empty: no commits yet) */
-  def snapshotVersions(name: String): Seq[Long] = {
-    val h = historyDir(name)
-    if (!Files.exists(h)) Seq.empty
-    else {
-      val ls = Files.list(h)
-      try ls.iterator().asScala.map(_.getFileName.toString)
-        .collect { case s if s.matches("v\\d+\\.json") =>
-          s.stripPrefix("v").stripSuffix(".json").toLong }
-        .toSeq.sorted
-      finally ls.close()
-    }
-  }
+  private def historyPath(name: String, version: Long): Path =
+    historyDir(name).resolve(s"v$version.json")
 
-  /** version of the CURRENT pointer (0 = manifest-less / pre-versioning) */
-  private def currentVersion(name: String): Long = {
-    val p = snapshotPath(name)
-    if (!Files.exists(p)) 0L
+  private val mapper = new ObjectMapper()
+
+  /** the manifest codec: (version, files) of one document, None if absent */
+  private def readManifest(p: Path): Option[(Long, Seq[String])] =
+    if (!Files.exists(p)) None
     else {
-      val doc = new ObjectMapper().readTree(Files.readString(p))
-      if (doc.has("version")) doc.get("version").asLong() else 0L
+      val doc = mapper.readTree(Files.readString(p))
+      Some((doc.path("version").asLong(0L),
+        doc.get("files").elements().asScala.map(_.asText()).toSeq))
     }
-  }
+
+  /** current committed file set, or None when the table never committed */
+  private[graft] def snapshotFiles(name: String): Option[Seq[String]] =
+    readManifest(snapshotPath(name)).map(_._2)
+
+  /** version of the CURRENT pointer (0 = never committed) */
+  private def currentVersion(name: String): Long =
+    readManifest(snapshotPath(name)).fold(0L)(_._1)
 
   /** file list of a retained manifest version (None: expired/never) */
   private[graft] def snapshotFilesAsOf(name: String,
-      version: Long): Option[Seq[String]] = {
-    val p = historyDir(name).resolve(s"v$version.json")
-    if (!Files.exists(p)) None
-    else {
-      val doc = new ObjectMapper().readTree(Files.readString(p))
-      Some(doc.get("files").elements().asScala.map(_.asText()).toSeq)
-    }
-  }
+      version: Long): Option[Seq[String]] =
+    readManifest(historyPath(name, version)).map(_._2)
+
+  /** retained snapshot versions, ascending (empty: no commits yet) */
+  def snapshotVersions(name: String): Seq[Long] =
+    if (!Files.exists(historyDir(name))) Seq.empty
+    else walk(historyDir(name)).map(_.getFileName.toString)
+      .collect { case s if s.matches("v\\d+\\.json") =>
+        s.stripPrefix("v").stripSuffix(".json").toLong }
+      .sorted
 
   /** every data file some retained manifest (history or pointer) still
     * references — the sweep exclusion set
     */
   private def retainedFiles(name: String): Set[String] =
-    (snapshotFiles(name).getOrElse(Seq.empty) ++
-      snapshotVersions(name)
-        .flatMap(v => snapshotFilesAsOf(name, v).getOrElse(Seq.empty))).toSet
+    (snapshotFiles(name).getOrElse(Nil) ++ snapshotVersions(name)
+      .flatMap(v => snapshotFilesAsOf(name, v).getOrElse(Nil))).toSet
 
-  /** TIME TRAVEL: the table exactly as manifest `version` committed it —
-    * same pinned schema and basePath partition inference as [[table]].
-    * Valid until [[expireSnapshots]] drops the version.
+  /** Delete every data file no retained manifest references (a crashed
+    * write's residue, expired generations). Only a file outside the
+    * current manifest needs the history manifests parsed, so an append-only
+    * table's sweep reads one manifest, not every retained one. Returns
+    * (surviving listing, #files deleted).
     */
-  def tableAsOf(name: String, version: Long): DataFrame = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    val files = snapshotFilesAsOf(name, version).getOrElse(
-      throw new IllegalArgumentException(
-        s"No retained snapshot v$version for table '$name' " +
-          s"(retained: ${snapshotVersions(name).mkString(", ")})"))
-    val dir = tableDir(name)
-    if (files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else spark.read.option("basePath", dir.toString).schema(schema)
-      .parquet(files.map(f => dir.resolve(f).toString): _*)
-      .select(schema.fieldNames.map(col): _*)
+  private def sweep(name: String): (Seq[String], Int) = {
+    val current = snapshotFiles(name).getOrElse(Nil).toSet
+    lazy val retained = retainedFiles(name)
+    val (kept, orphans) =
+      listRelParquet(name).partition(f => current(f) || retained(f))
+    orphans.foreach(f => Files.deleteIfExists(tableDir(name).resolve(f)))
+    (kept, orphans.size)
   }
 
   /** Release history: keep the newest `keepLast` versions (the pointer's
@@ -175,66 +167,81 @@ final class DB private (val root: Path, val spark: SparkSession) {
     */
   def expireSnapshots(name: String, keepLast: Int = 1): (Int, Int) = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
-    val versions = snapshotVersions(name)
     val cur = currentVersion(name)
-    val drop = versions.dropRight(keepLast).filterNot(_ == cur)
-    drop.foreach(v =>
-      Files.deleteIfExists(historyDir(name).resolve(s"v$v.json")))
-    val keep = retainedFiles(name)
-    val dir = tableDir(name)
-    val orphans = listRelParquet(name).filterNot(keep)
-    orphans.foreach(f => Files.deleteIfExists(dir.resolve(f)))
-    (drop.size, orphans.size)
+    val drop = snapshotVersions(name).dropRight(keepLast).filterNot(_ == cur)
+    drop.foreach(v => Files.deleteIfExists(historyPath(name, v)))
+    (drop.size, sweep(name)._2)
   }
 
-  /** THE commit point: write the versioned manifest into the history dir
-    * (fsync'd), then stage the same doc to a temp sibling, fsync,
-    * atomically move over `_snapshot.json`, fsync the directory — the
+  /** THE commit path of every write verb, in four steps:
+    *  1. sweep residue no retained manifest references (a crashed write's
+    *     files are never adopted, even on a table that never committed);
+    *  2. list the table dir;
+    *  3. run `write`, which adds files to the table dir and deletes none;
+    *  4. commit the current manifest minus the files `replaces(added)`
+    *     names, plus exactly the files this write `added`.
+    * A failure before step 4 leaves the committed view untouched and only
+    * unreferenced files behind, swept by the next commit. Replaced files
+    * stay on disk for the previous retained manifest ([[tableAsOf]]);
+    * [[expireSnapshots]] is the reclamation point.
+    */
+  private def commit(name: String, replaces: Seq[String] => String => Boolean)(
+      write: => Unit): Unit = {
+    val before = sweep(name)._1.toSet
+    write
+    val added = listRelParquet(name).filterNot(before)
+    val replaced = replaces(added)
+    commitSnapshot(name,
+      snapshotFiles(name).getOrElse(Nil).filterNot(replaced) ++ added)
+  }
+
+  private val ReplacesNothing: Seq[String] => String => Boolean = _ => _ => false
+
+  /** The commit point: write the versioned manifest into the history dir,
+    * then stage the same doc to a temp sibling and atomically move it over
+    * `_snapshot.json`, fsync'ing each file and then the directory — the
     * same staged-rename discipline as the rtcdb index commit
     * (RtcdbWrite.scala), so readers see the old file set or the new one,
     * never a mix, even across power loss.
     */
   private def commitSnapshot(name: String, files: Seq[String]): Unit = {
-    val mapper = new ObjectMapper()
+    val version = currentVersion(name) + 1
     val doc = mapper.createObjectNode()
-    doc.put("version", currentVersion(name) + 1)
+    doc.put("version", version)
     val arr = doc.putArray("files")
     files.sorted.foreach(arr.add)
+    val bytes = mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(doc)
     // history first: a retained copy must exist before the pointer can
     // name this version (see historyDir scaladoc for the crash window)
     Files.createDirectories(historyDir(name))
-    val hist = historyDir(name).resolve(s"v${currentVersion(name) + 1}.json")
-    val hch = java.nio.channels.FileChannel.open(hist,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE,
-      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      hch.write(java.nio.ByteBuffer.wrap(
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(doc)))
-      hch.force(true)
-    } finally hch.close()
+    writeSynced(historyPath(name, version), bytes)
     val tmp = tableDir(name).resolve("_snapshot.json.tmp")
-    val ch = java.nio.channels.FileChannel.open(tmp,
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE,
-      java.nio.file.StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      ch.write(java.nio.ByteBuffer.wrap(
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(doc)))
-      ch.force(true)
-    } finally ch.close()
-    Files.move(tmp, snapshotPath(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    writeSynced(tmp, bytes)
+    Files.move(tmp, snapshotPath(name), StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
     // POSIX: the rename itself needs a directory fsync to be durable;
     // not every filesystem allows opening a directory channel — best
     // effort, matching the rtcdb write path
     try {
-      val dch = java.nio.channels.FileChannel.open(tableDir(name),
-        java.nio.file.StandardOpenOption.READ)
+      val dch = FileChannel.open(tableDir(name), StandardOpenOption.READ)
       try dch.force(true) finally dch.close()
     } catch { case _: Exception => () }
   }
+
+  private def writeSynced(p: Path, bytes: Array[Byte]): Unit = {
+    val ch = FileChannel.open(p, StandardOpenOption.CREATE,
+      StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
+    try { ch.write(ByteBuffer.wrap(bytes)); ch.force(true) } finally ch.close()
+  }
+
+  /** every path under `p` (the stream is closed before returning) */
+  private def walk(p: Path): Seq[Path] = {
+    val s = Files.walk(p)
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  private def parquetFiles(p: Path): Seq[Path] =
+    walk(p).filter(_.toString.endsWith(".parquet"))
 
   /** data files under the table dir, relative to it (manifest encoding) */
   private def listRelParquet(name: String): Seq[String] = {
@@ -249,14 +256,84 @@ final class DB private (val root: Path, val spark: SparkSession) {
     if (i < 0) "" else relFile.substring(0, i)
   }
 
+  /** Run `body` on the scratch dir `{root}/{name}.__{tag}`, wiped before
+    * and after, so a failed verb leaves no staging residue.
+    */
+  private def withScratch[T](name: String, tag: String)(body: Path => T): T = {
+    val tmp = root.resolve(s"$name.__$tag")
+    def wipe(): Unit = if (Files.exists(tmp)) walk(tmp).reverse.foreach(Files.delete)
+    wipe()
+    try body(tmp) finally wipe()
+  }
+
+  // ── validation ──────────────────────────────────────────────────────────
+  private def checkShape(df: DataFrame, schema: StructType): Unit =
+    if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
+        schema.fields.map(f => (f.name, f.dataType)).toSeq)
+      throw new IllegalArgumentException("Mismatched data type")
+
+  private def requireKeys(verb: String, keys: Seq[String],
+      schema: StructType): Unit =
+    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains),
+      s"$verb keys must be table columns, got $keys")
+
+  /** The validation of the DataFrame ingest verbs: schema equality, then a
+    * pre-scan that rejects null batches BEFORE any file is written (the
+    * reference aborts the whole write on a bad cell — partial appends
+    * would be worse than an extra scan), then [[nullGuarded]] so a
+    * non-deterministic source that produces nulls only on the write-time
+    * evaluation still cannot land them in the table.
+    */
+  private def validated(name: String, df: DataFrame): (StructType, DataFrame) = {
+    val schema = schemaOf(name)
+    checkShape(df, schema)
+    if (!df.filter(schema.fieldNames.map(col(_).isNull).reduce(_ || _)).isEmpty)
+      throw new IllegalArgumentException("Mismatched data type")
+    (schema, nullGuarded(df, schema))
+  }
+
+  /** Null-guarded projection: the written plan itself raises on any null
+    * cell, so a NON-DETERMINISTIC source that passes the pre-scan null
+    * check cannot materialize nulls on the (separate) write-time
+    * evaluation. Shared by every write path — the pre-scan gives the
+    * clean whole-batch abort before any file exists; this guard makes
+    * the abort airtight without persisting the input.
+    */
+  private def nullGuarded(df: DataFrame, schema: StructType): DataFrame =
+    df.select(schema.fields.map { f =>
+      when(col(f.name).isNull,
+        raise_error(lit("Mismatched data type")).cast(f.dataType))
+        .otherwise(col(f.name)).as(f.name)
+    }.toSeq: _*)
+
+  /** STAGE-AND-VALIDATE in ONE evaluation, for the merge verbs: the shape
+    * check, then the null-guarded projection raises on any null cell while
+    * the batch is staged to an invisible scratch dir — the same whole-batch
+    * abort a pre-scan gives (staging residue is wiped, the table
+    * untouched), but the caller's plan is evaluated exactly once. `body`
+    * reads the staged batch back as tiny parquet instead of re-running that
+    * plan for each of its probes, anti-joins and rewrites (measured on
+    * q150's MV loop: three evaluations were the dominant per-batch cost).
+    */
+  private def staged[T](name: String, df: DataFrame, schema: StructType)(
+      body: DataFrame => T): T = {
+    checkShape(df, schema)
+    withScratch(name, "stage") { tmp =>
+      nullGuarded(df, schema).write
+        .option("compression", "lz4").parquet(tmp.toString)
+      body(spark.read.schema(StructType(schema.fields.map(_.copy(nullable = true))))
+        .parquet(tmp.toString))
+    }
+  }
+
+  // ── write verbs ─────────────────────────────────────────────────────────
   /** Append-only batch ingest of driver-side rows, mirroring
     * `write_data`'s per-cell validation (`src/storage.rs:250-252`: a
     * mismatched value aborts the whole write) and the reference's no-null
     * type system (`src/data.rs:10-13` has no Null variant).
     */
   def write(name: String, rows: Seq[Row]): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
+    val schema = schemaOf(name)
     rows.foreach { r =>
       if (r.length != schema.length)
         throw new IllegalArgumentException("Mismatched data type")
@@ -275,121 +352,171 @@ final class DB private (val root: Path, val spark: SparkSession) {
         if (!ok) throw new IllegalArgumentException("Mismatched data type")
       }
     }
-    writeValidated(spark.createDataFrame(rows.asJava, schema), name, schema)
+    appendSorted(name, schema, spark.createDataFrame(rows.asJava, schema))
   }
 
   /** Distributed append ingest: the 100 TB path. Schema must match the
-    * catalog exactly; nulls anywhere fail the batch.
-    *
-    * Validation strategy: a pre-scan rejects null batches BEFORE any file
-    * is written (the reference aborts the whole write on a bad cell —
-    * partial appends would be worse than an extra scan), and the written
-    * projection additionally carries a raise_error null guard so a
-    * non-deterministic source that produces nulls only on the write-time
-    * evaluation still cannot land them in the table.
+    * catalog exactly; nulls anywhere fail the batch ([[validated]]).
     */
   def write(name: String, df: DataFrame): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
-        schema.fields.map(f => (f.name, f.dataType)).toSeq)
-      throw new IllegalArgumentException("Mismatched data type")
-    val anyNull = schema.fieldNames.map(col(_).isNull).reduce(_ || _)
-    if (!df.filter(anyNull).isEmpty)
-      throw new IllegalArgumentException("Mismatched data type")
-    writeValidated(nullGuarded(df, schema), name, schema)
+    val (schema, guarded) = validated(name, df)
+    appendSorted(name, schema, guarded)
   }
 
-  /** Null-guarded projection: the written plan itself raises on any null
-    * cell, so a NON-DETERMINISTIC source that passes the pre-scan null
-    * check cannot materialize nulls on the (separate) write-time
-    * evaluation. Shared by every write path — the pre-scan gives the
-    * clean whole-batch abort before any file exists; this guard makes
-    * the abort airtight without persisting the input.
+  /** Range-sorted LZ4 Parquet append — realizes `README.md:44`'s sort
+    * contract so min/max pruning works (SURVEY.md §1.3, §7.4.3).
     */
-  private def nullGuarded(df: DataFrame, schema: StructType): DataFrame =
-    df.select(schema.fields.map { f =>
-      when(col(f.name).isNull,
-        raise_error(lit("Mismatched data type")).cast(f.dataType))
-        .otherwise(col(f.name)).as(f.name)
-    }.toSeq: _*)
+  private def appendSorted(name: String, schema: StructType, df: DataFrame): Unit = {
+    val sortCols = schema.fieldNames.map(col).toSeq
+    commit(name, ReplacesNothing) {
+      df.repartitionByRange(sortCols: _*)
+        .sortWithinPartitions(sortCols: _*)
+        .write.mode("append").option("compression", "lz4")
+        .parquet(tableDir(name).toString)
+    }
+  }
+
+  /** Directory-partitioned append ingest (`{table}/{col}={value}/...`):
+    * coarse-grained data skipping — filters on the partition columns prune
+    * whole directories before any file is opened (PartitionFilters in the
+    * scan, asserted in DBSpec). The complement of the range-sort layout:
+    * partition on low-cardinality operational keys (date, category),
+    * range-sort within partitions for row-group pruning on the rest.
+    */
+  def writePartitioned(name: String, df: DataFrame,
+      partitionCols: Seq[String]): Unit = {
+    val (schema, guarded) = validated(name, df)
+    commit(name, ReplacesNothing) {
+      appendPartitioned(name, schema, guarded, partitionCols)
+    }
+  }
+
+  /** The partitioned write shared by [[writePartitioned]],
+    * [[upsertPartitioned]] and [[compactPartitions]]. Partition columns
+    * lead the in-partition sort: the dynamic-partition writer requires
+    * ordering by them, so leading with them means our sort satisfies that
+    * requirement (no second SortExec) and the data-column ordering inside
+    * each directory is preserved exactly.
+    */
+  private def appendPartitioned(name: String, schema: StructType,
+      df: DataFrame, partitionCols: Seq[String]): Unit =
+    df.repartition(partitionCols.map(col): _*)
+      .sortWithinPartitions((partitionCols ++
+        schema.fieldNames.filterNot(partitionCols.contains)).map(col): _*)
+      .write.mode("append").option("compression", "lz4")
+      .partitionBy(partitionCols: _*)
+      .parquet(tableDir(name).toString)
+
+  /** Z-ordered (Morton-curve) ingest: rows sort by the bit-interleave of
+    * two long columns, so per-file min/max ranges stay tight on BOTH
+    * dimensions — a filter on EITHER column prunes files/row-groups,
+    * where a linear sort only ever prunes on its leading column. This is
+    * the multi-dimensional clustering layout (Databricks OPTIMIZE ZORDER,
+    * Iceberg sort orders) expressed as a pure Column expression: the
+    * classic mask-spread interleave, 12 bitwise ops per row, whole-stage
+    * codegen, no UDF.
+    *
+    * Same validation as [[write]]; appends compose (re-[[compact]] after
+    * many appends to restore global clustering).
+    */
+  def writeZOrdered(name: String, df: DataFrame, colA: String,
+      colB: String): Unit = {
+    val longCols = schemaOf(name).fields
+      .collect { case f if f.dataType.typeName == "long" => f.name }
+    require(Seq(colA, colB).forall(longCols.contains),
+      s"z-order columns must be long table columns, got $colA/$colB")
+    val (_, guarded) = validated(name, df)
+    commit(name, ReplacesNothing) {
+      guarded.withColumn("__z", DB.zValue(col(colA), col(colB)))
+        .repartitionByRange(col("__z"))
+        .sortWithinPartitions(col("__z"))
+        .drop("__z")
+        .write.mode("append").option("compression", "lz4")
+        .parquet(tableDir(name).toString)
+    }
+  }
+
+  /** Write `df` as the table's new range-sorted contents, replacing every
+    * committed file. The rewrite is staged to `{name}.__rewrite` FIRST (it
+    * reads the generation it supersedes), then only its `.parquet` files
+    * move into the table dir under a `g{version}-` prefix — no `.crc` or
+    * `_SUCCESS` litter — and [[commit]] swaps the manifest. Every rewrite
+    * verb ([[upsert]], [[upsertScd2]], [[delete]], [[compact]]) gets the
+    * same old-or-new durability and time travel as the partitioned merge.
+    *
+    * When the caller doesn't pin a file count, it is derived from the
+    * COMMITTED generation's size (≈ the rewrite's size for merge-style
+    * rewrites; superseded-but-retained files must not inflate it): file
+    * count scales with data at 100 TB, while a small table rewrites to ONE
+    * file instead of spark.sql.shuffle.partitions shards — an upsert loop
+    * on an MV-sized table otherwise pays a range-sampling job plus a
+    * 32-tiny-file write+read per merge (measured: the dominant cost of
+    * q150's maintenance steps).
+    */
+  private def atomicRewrite(name: String, df: DataFrame, schema: StructType,
+      nFiles: Option[Int]): Unit = {
+    val dir = tableDir(name)
+    val sortCols = schema.fieldNames.map(col).toSeq
+    val n = nFiles.getOrElse {
+      val bytes = snapshotFiles(name).getOrElse(Nil)
+        .map(f => Files.size(dir.resolve(f))).sum
+      math.max(1, math.ceil(bytes.toDouble / (128L * 1024 * 1024)).toInt)
+    }
+    withScratch(name, "rewrite") { tmp =>
+      commit(name, _ => _ => true) {
+        df.repartitionByRange(n, sortCols: _*)
+          .sortWithinPartitions(sortCols: _*)
+          .write.mode("overwrite").option("compression", "lz4")
+          .parquet(tmp.toString)
+        Files.createDirectories(dir)
+        val gen = s"g${currentVersion(name) + 1}"
+        parquetFiles(tmp).foreach(p =>
+          Files.move(p, dir.resolve(s"$gen-${p.getFileName}")))
+      }
+    }
+  }
 
   /** Compaction — the small-files remedy every append-only warehouse
     * needs: N appends leave N×P files whose per-file row-group statistics
     * overlap, degrading both scan planning (file-listing cost) and
     * zone-map pruning (overlapping min/max ranges prune nothing). Rewrites
     * the table as one globally range-sorted layout targeting
-    * `targetFileBytes` per file, then swaps directories atomically
-    * (write to `<table>.__compact`, move the old dir away, move the new
-    * one in, delete the old — a crash before the final move leaves the
-    * original table intact).
+    * `targetFileBytes` per file through [[atomicRewrite]]; the old
+    * generation stays readable via [[tableAsOf]] until
+    * [[expireSnapshots]] reclaims it.
     *
-    * Returns (filesBefore, filesAfter).
+    * Returns (filesBefore, filesAfter), committed files only: superseded
+    * generations retained for time travel are not part of the table.
     */
   def compact(name: String, targetFileBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    val dir = tableDir(name)
-    if (!Files.exists(dir)) return (0, 0)
-    // COMMITTED files only, on both sides of the report: superseded
-    // generations retained for time travel are not part of the table —
-    // counting them would make every compaction look like a no-op
-    def committed: Seq[String] =
-      snapshotFiles(name).getOrElse(listRelParquet(name))
-    val before = committed
+    val schema = schemaOf(name)
+    val before = snapshotFiles(name).getOrElse(Nil)
     if (before.isEmpty) return (0, 0)
-    val totalBytes = before.map(f => Files.size(dir.resolve(f))).sum
+    val totalBytes = before.map(f => Files.size(tableDir(name).resolve(f))).sum
     val nFiles = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    // read through table(): on a snapshot-committed table the manifest is
-    // the truth — a raw directory read would resurrect superseded files.
-    // The rewrite commits a new manifest generation; the old one stays
-    // readable via tableAsOf until expireSnapshots reclaims it.
     atomicRewrite(name, table(name), schema, Some(nFiles))
-    (before.size, committed.size)
+    (before.size, snapshotFiles(name).getOrElse(Nil).size)
   }
 
   /** SCD1 upsert (MERGE semantics on plain parquet): rows of `df` REPLACE
     * existing rows sharing the same `keys` values; everything else is
-    * preserved. Validation matches the distributed [[write]] (schema
-    * equality, whole-batch null abort); the rewrite reuses the compaction
-    * swap, so readers either see the old table or the fully-merged one —
-    * never a partial state.
+    * preserved. The batch is [[staged]] (schema equality, whole-batch null
+    * abort, one evaluation) and the merge commits through
+    * [[atomicRewrite]], so readers either see the old table or the
+    * fully-merged one — never a partial state.
     *
     * Scale note: this is the rewrite-on-merge form (cost O(table)); the
-    * at-scale refinement is partition-scoped rewrites via
-    * [[writePartitioned]] layouts (only directories containing touched
-    * keys re-write), which composes with this same swap primitive.
+    * at-scale refinement is [[upsertPartitioned]] on [[writePartitioned]]
+    * layouts (only directories containing touched keys re-write).
     */
   def upsert(name: String, df: DataFrame, keys: Seq[String]): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains),
-      s"upsert keys must be table columns, got $keys")
-    if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
-        schema.fields.map(f => (f.name, f.dataType)).toSeq)
-      throw new IllegalArgumentException("Mismatched data type")
-    // STAGE-AND-VALIDATE in ONE evaluation: the null-guarded projection
-    // raises on any null cell while the batch is staged to an invisible
-    // temp dir — the same whole-batch abort a pre-scan gives (staging
-    // residue is wiped, the table untouched), but the caller's plan is
-    // evaluated exactly once. Before, the pre-scan + key anti-join +
-    // rewrite each re-evaluated it: three computations of a possibly
-    // expensive merge plan (measured on q150's MV loop: the dominant
-    // per-batch cost).
-    val tmp = root.resolve(s"$name.__stage")
-    def wipeTmp(): Unit = if (Files.exists(tmp))
-      Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    wipeTmp()
-    try {
-      nullGuarded(df, schema).write
-        .option("compression", "lz4").parquet(tmp.toString)
-      val staged = spark.read.schema(
-        StructType(schema.fields.map(_.copy(nullable = true))))
-        .parquet(tmp.toString)
+    val schema = schemaOf(name)
+    requireKeys("upsert", keys, schema)
+    staged(name, df, schema) { batch =>
       val kept = table(name)
-        .join(staged.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      atomicRewrite(name, kept.unionByName(staged), schema, None)
-    } finally wipeTmp()
+        .join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      atomicRewrite(name, kept.unionByName(batch), schema, None)
+    }
   }
 
   /** Keyed DELETE — the MERGE family's third verb: rows matching any key
@@ -399,10 +526,8 @@ final class DB private (val root: Path, val spark: SparkSession) {
     * the key columns.
     */
   def delete(name: String, keyDf: DataFrame, keys: Seq[String]): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains),
-      s"delete keys must be table columns, got $keys")
+    val schema = schemaOf(name)
+    requireKeys("delete", keys, schema)
     require(keyDf.schema.fieldNames.toSeq == keys,
       s"keyDf must carry exactly the key columns $keys, " +
         s"got ${keyDf.schema.fieldNames.toSeq}")
@@ -421,10 +546,8 @@ final class DB private (val root: Path, val spark: SparkSession) {
     */
   def diff(name: String, keys: Seq[String], vOld: Long,
       vNew: Option[Long] = None): DataFrame = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains),
-      s"diff keys must be table columns, got $keys")
+    val schema = schemaOf(name)
+    requireKeys("diff", keys, schema)
     val attrs = schema.fieldNames.filterNot(keys.contains).toSeq
     val o = tableAsOf(name, vOld).as("o")
     val n = vNew.map(tableAsOf(name, _)).getOrElse(table(name)).as("n")
@@ -465,35 +588,21 @@ final class DB private (val root: Path, val spark: SparkSession) {
     */
   def upsertScd2(name: String, df: DataFrame, keys: Seq[String],
       version: Long): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
+    val schema = schemaOf(name)
     val sys = Seq("valid_from", "valid_to")
     require(sys.forall(schema.fieldNames.contains),
       s"SCD2 table $name must declare valid_from/valid_to BIGINT columns")
     val bizSchema = StructType(schema.fields.filterNot(f => sys.contains(f.name)))
     require(keys.nonEmpty && keys.forall(bizSchema.fieldNames.contains),
       s"upsert keys must be business columns, got $keys")
-    if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
-        bizSchema.fields.map(f => (f.name, f.dataType)).toSeq)
-      throw new IllegalArgumentException("Mismatched data type")
     val attrs = bizSchema.fieldNames.filterNot(keys.contains).toSeq
-    // stage-and-validate once, the [[upsert]] discipline
-    val tmp = root.resolve(s"$name.__stage")
-    def wipeTmp(): Unit = if (Files.exists(tmp))
-      Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    wipeTmp()
-    try {
-      nullGuarded(df, bizSchema).write
-        .option("compression", "lz4").parquet(tmp.toString)
-      val staged = spark.read.schema(
-        StructType(bizSchema.fields.map(_.copy(nullable = true))))
-        .parquet(tmp.toString)
+    staged(name, df, bizSchema) { batch =>
       val hist = table(name)
       val cur = hist.filter(col("valid_to") === Long.MaxValue)
       val past = hist.filter(col("valid_to") =!= Long.MaxValue)
       val joinCond = keys.map(k => col(s"d.$k") === col(s"c.$k"))
         .reduce(_ && _)
-      val joined = staged.as("d").join(cur.as("c"), joinCond, "left_outer")
+      val joined = batch.as("d").join(cur.as("c"), joinCond, "left_outer")
       // changed = new key (no current row) OR any attribute differs
       val isChanged = col(s"c.${keys.head}").isNull ||
         attrs.map(a => !(col(s"d.$a") <=> col(s"c.$a"))).reduce(_ || _)
@@ -511,122 +620,50 @@ final class DB private (val root: Path, val spark: SparkSession) {
       atomicRewrite(name,
         past.unionByName(keptCur).unionByName(closed).unionByName(newRows),
         schema, None)
-    } finally wipeTmp()
+    }
   }
 
-  /** Partition-scoped SCD1 upsert — the at-scale refinement [[upsert]]'s
-    * scaladoc promises: on a directory-partitioned table (written via
-    * [[writePartitioned]]), rows of `df` replace same-key rows and ONLY
-    * the partitions `df` touches are rewritten — merge cost is
-    * O(touched partitions), not O(table), which is what makes MERGE
-    * affordable on a 100 TB fact table where a day's update touches a
-    * handful of date partitions.
+  /** Partition-scoped SCD1 upsert — the at-scale refinement of [[upsert]]:
+    * on a directory-partitioned table (written via [[writePartitioned]]),
+    * rows of `df` replace same-key rows and ONLY the partitions `df`
+    * touches are rewritten — merge cost is O(touched partitions), not
+    * O(table), which is what makes MERGE affordable on a 100 TB fact table
+    * where a day's update touches a handful of date partitions.
     *
     * Contract: `partitionCols ⊆ keys` — a key must not move between
     * partitions, otherwise its old row (in an untouched partition) would
     * survive alongside the new one. Enforced with `require`.
     *
-    * Mechanics: the merged content of the touched partitions is staged to
-    * a temp directory FIRST (the merge reads the same files the overwrite
-    * would delete), then written back under dynamic partition overwrite,
-    * which replaces exactly the partitions present in the staged data and
-    * leaves every other directory byte-identical (asserted in DBSpec).
-    *
-    * The read side is O(touched partitions) STATICALLY: the touched
-    * partition tuples (tiny — one row per partition) are collected to the
-    * driver and pushed as a literal partition filter on the table scan, so
-    * directory pruning never depends on runtime DPP deciding to fire
-    * against the semi join (asserted in DBSpec: the merge scan's
-    * PartitionFilters name the touched values).
-    *
-    * Durability contract — old-or-new, SAME strength as [[upsert]] (r5
-    * verdict task 4): the merge never deletes or overwrites a live file.
-    * New files are APPENDED next to the old generation, then a per-table
-    * snapshot manifest (`_snapshot.json`, the Iceberg/Delta snapshot-
-    * pointer idea on plain parquet) is atomically swapped to the new file
-    * set — that single staged rename is the commit point, so a reader
-    * sees the complete old view or the complete new view across ALL
-    * touched partitions, never a mix of generations. A crash before the
-    * swap leaves only invisible uncommitted files (swept by the next
-    * upsert); a crash after it leaves superseded files that are equally
-    * invisible through the manifest. Readers resolve the manifest in
-    * [[table]]; at 100 TB the manifest is the same driver-side
-    * file-listing a directory scan needs anyway, just pinned to a
-    * consistent generation set.
+    * Mechanics: the batch is [[staged]]; [[upsertMergeInput]] builds the
+    * merged content of the touched partitions (read side statically
+    * pruned, asserted in DBSpec), and its write APPENDS a new generation
+    * next to the old one — nothing is deleted or overwritten. Every
+    * touched partition carries ≥1 batch row, so the directories this write
+    * adds files to are exactly the touched partitions, and [[commit]]
+    * replaces only their files — the single manifest swap commits every
+    * touched partition at once, and untouched directories stay
+    * byte-identical (asserted in DBSpec).
     */
   def upsertPartitioned(name: String, df: DataFrame,
       partitionCols: Seq[String], keys: Seq[String],
       literalCap: Int = DB.UpsertPruneLiteralCap): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    require(keys.nonEmpty && keys.forall(schema.fieldNames.contains),
-      s"upsert keys must be table columns, got $keys")
+    val schema = schemaOf(name)
+    requireKeys("upsert", keys, schema)
     require(partitionCols.nonEmpty && partitionCols.forall(keys.contains),
       s"partition columns must be part of the upsert key, got $partitionCols vs $keys")
-    if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
-        schema.fields.map(f => (f.name, f.dataType)).toSeq)
-      throw new IllegalArgumentException("Mismatched data type")
-    val dir = tableDir(name)
-    // the committed view this merge starts from: the manifest if one
-    // exists, else the live listing (first snapshot commit adopts it)
-    val current = snapshotFiles(name).getOrElse(listRelParquet(name))
-    val currentSet = current.toSet
-    // sweep residue of a crashed prior merge: files referenced by NO
-    // retained manifest are uncommitted — invisible to readers, safe to
-    // drop (superseded-but-retained generations stay for tableAsOf and
-    // are reclaimed by expireSnapshots)
-    if (Files.exists(snapshotPath(name))) {
-      val retained = retainedFiles(name)
-      listRelParquet(name).filterNot(retained)
-        .foreach(f => Files.deleteIfExists(dir.resolve(f)))
+    staged(name, df, schema) { batch =>
+      // empty batch: nothing to merge, nothing to commit
+      upsertMergeInput(name, batch, partitionCols, keys, literalCap)
+        .foreach { merged =>
+          val touched: Seq[String] => String => Boolean = added => {
+            val dirs = added.map(parentRel).toSet
+            f => dirs(parentRel(f))
+          }
+          commit(name, touched) {
+            appendPartitioned(name, schema, merged, partitionCols)
+          }
+        }
     }
-    val tmp = root.resolve(s"$name.__upsert")
-    def wipeTmp(): Unit = if (Files.exists(tmp))
-      Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    wipeTmp()
-    try {
-      // STAGE-AND-VALIDATE the batch in ONE evaluation (see upsert): the
-      // null guard raises during this invisible staging write, giving the
-      // whole-batch abort without a pre-scan, and the touched-partition
-      // probe + merge below re-read tiny parquet instead of re-running
-      // the caller's plan
-      val nullableSchema = StructType(schema.fields.map(_.copy(nullable = true)))
-      nullGuarded(df, schema).write
-        .option("compression", "lz4").parquet(s"$tmp/batch")
-      val batch = spark.read.schema(nullableSchema).parquet(s"$tmp/batch")
-      val merged = upsertMergeInput(name, batch, partitionCols, keys,
-          literalCap)
-        .getOrElse(return) // empty batch: nothing to merge, nothing to touch
-      // The merge reads the OLD generation's files and appends NEW ones
-      // (unique part names; nothing is deleted before the manifest swap
-      // below — the sweep at entry only ever removes files no retained
-      // manifest references), so the merged frame can be written
-      // directly: the r5-era intermediate staging write+read-back of the
-      // whole merged content predated the append+manifest commit and was
-      // one full extra materialization per batch (measured: the dominant
-      // single-task stages of q156/q185's profile). A failure mid-write
-      // leaves only unreferenced files — swept by the next merge, same
-      // as a failed staging write.
-      val sortCols = (partitionCols ++
-        schema.fieldNames.filterNot(partitionCols.contains)).map(col)
-      merged
-        .repartition(partitionCols.map(col): _*)
-        .sortWithinPartitions(sortCols: _*)
-        .write.mode("append").option("compression", "lz4")
-        .partitionBy(partitionCols: _*)
-        .parquet(dir.toString)
-      // every touched partition carries ≥1 batch row, so the new
-      // generation's directories are exactly the touched partitions
-      val newFiles = listRelParquet(name).filterNot(currentSet)
-      val replacedDirs = newFiles.map(parentRel).toSet
-      val (superseded, kept) =
-        current.partition(f => replacedDirs.contains(parentRel(f)))
-      commitSnapshot(name, kept ++ newFiles) // ← THE commit point
-      // superseded files stay on disk: the previous version's retained
-      // manifest still references them (tableAsOf), and expireSnapshots
-      // is the reclamation point — the Iceberg lifecycle
-      locally { val _ = superseded }
-    } finally wipeTmp() // staging residue must not outlive a failed merge
   }
 
   /** The partition-pruned merge input for [[upsertPartitioned]]: current
@@ -674,193 +711,17 @@ final class DB private (val root: Path, val spark: SparkSession) {
     }
   }
 
-  /** Z-ordered (Morton-curve) ingest: rows sort by the bit-interleave of
-    * two long columns, so per-file min/max ranges stay tight on BOTH
-    * dimensions — a filter on EITHER column prunes files/row-groups,
-    * where a linear sort only ever prunes on its leading column. This is
-    * the multi-dimensional clustering layout (Databricks OPTIMIZE ZORDER,
-    * Iceberg sort orders) expressed as a pure Column expression: the
-    * classic mask-spread interleave, 12 bitwise ops per row, whole-stage
-    * codegen, no UDF.
-    *
-    * Same validation as [[write]]; appends compose (re-[[compact]] after
-    * many appends to restore global clustering).
-    */
-  def writeZOrdered(name: String, df: DataFrame, colA: String,
-      colB: String): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    require(Seq(colA, colB).forall(c => schema.fields.exists(f =>
-      f.name == c && f.dataType.typeName == "long")),
-      s"z-order columns must be long table columns, got $colA/$colB")
-    if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
-        schema.fields.map(f => (f.name, f.dataType)).toSeq)
-      throw new IllegalArgumentException("Mismatched data type")
-    val anyNull = schema.fieldNames.map(col(_).isNull).reduce(_ || _)
-    if (!df.filter(anyNull).isEmpty)
-      throw new IllegalArgumentException("Mismatched data type")
-    val z = DB.zValue(col(colA), col(colB))
-    val before = if (Files.exists(snapshotPath(name)))
-      Some(listRelParquet(name).toSet) else None
-    nullGuarded(df, schema).withColumn("__z", z)
-      .repartitionByRange(col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
-      .write.mode("append").option("compression", "lz4")
-      .parquet(tableDir(name).toString)
-    before.foreach { b =>
-      val cur = snapshotFiles(name).getOrElse(Seq.empty)
-      commitSnapshot(name, cur ++ listRelParquet(name).filterNot(b))
-    }
-  }
-
-  private def parquetFiles(p: Path): Seq[Path] =
-    Files.walk(p).iterator().asScala
-      .filter(f => f.toString.endsWith(".parquet")).toSeq
-
-  /** write `df` as the table's new range-sorted contents, then swap
-    * directories atomically (temp write → move-aside → move-in → delete;
-    * a crash before the final move leaves the original table intact)
-    */
-  private def atomicRewrite(name: String, df: DataFrame, schema: StructType,
-      nFiles: Option[Int]): Unit = {
-    val dir = tableDir(name)
-    val sortCols = schema.fieldNames.map(col).toSeq
-    // sweep residue no retained manifest references (crashed commits,
-    // expired generations) — the upsertPartitioned preamble
-    if (Files.exists(snapshotPath(name))) {
-      val retained = retainedFiles(name)
-      listRelParquet(name).filterNot(retained)
-        .foreach(f => Files.deleteIfExists(dir.resolve(f)))
-    }
-    val tmp = root.resolve(s"$name.__rewrite")
-    // When the caller doesn't pin a file count, derive it from the
-    // COMMITTED generation's size (≈ the rewrite's size for merge-style
-    // rewrites; superseded-but-retained files must not inflate it):
-    // file count scales with data at 100 TB, while a small table
-    // rewrites to ONE file instead of spark.sql.shuffle.partitions
-    // shards — an upsert loop on an MV-sized table otherwise pays a
-    // range-sampling job plus a 32-tiny-file write+read per merge
-    // (measured: the dominant cost of q150's maintenance steps).
-    val n = nFiles.getOrElse {
-      val bytes =
-        if (!Files.exists(dir)) 0L
-        else snapshotFiles(name) match {
-          case Some(files) => files.map(f => Files.size(dir.resolve(f))).sum
-          case None => parquetFiles(dir).map(Files.size).sum
-        }
-      math.max(1, math.ceil(bytes.toDouble / (128L * 1024 * 1024)).toInt)
-    }
-    // stage the rewrite FIRST (it reads the generation it supersedes),
-    // then adopt the staged part-files next to the old generation and
-    // swap the snapshot manifest — the commit point. Old files stay on
-    // disk for retained manifests ([[tableAsOf]]); [[expireSnapshots]]
-    // is the reclamation point. This gives every rewrite verb (upsert,
-    // SCD2, delete, compact) the same old-or-new durability AND time
-    // travel as the partitioned merge path.
-    def wipeTmp(): Unit = if (Files.exists(tmp))
-      Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    wipeTmp()
-    try {
-      df.repartitionByRange(n, sortCols: _*)
-        .sortWithinPartitions(sortCols: _*)
-        .write.mode("overwrite").option("compression", "lz4")
-        .parquet(tmp.toString)
-      Files.createDirectories(dir)
-      val gen = s"g${currentVersion(name) + 1}"
-      val newFiles = parquetFiles(tmp).map { p =>
-        val nm = s"$gen-${p.getFileName}"
-        Files.move(p, dir.resolve(nm))
-        nm
-      }
-      commitSnapshot(name, newFiles)
-    } finally wipeTmp()
-  }
-
-  /** Range-sorted LZ4 Parquet append — realizes `README.md:44`'s sort
-    * contract so min/max pruning works (SURVEY.md §1.3, §7.4.3).
-    */
-  private def writeValidated(df: DataFrame, name: String, schema: StructType): Unit = {
-    val sortCols = schema.fieldNames.map(col).toSeq
-    // snapshot-committed tables (a prior rewrite/merge versioned them):
-    // an append must join the manifest or it would be invisible — record
-    // the physical listing BEFORE the write so only THIS batch's files
-    // are adopted (the writePartitioned discipline)
-    val before = if (Files.exists(snapshotPath(name)))
-      Some(listRelParquet(name).toSet) else None
-    df.repartitionByRange(sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .write
-      .mode("append")
-      .option("compression", "lz4")
-      .parquet(tableDir(name).toString)
-    before.foreach { b =>
-      val cur = snapshotFiles(name).getOrElse(Seq.empty)
-      commitSnapshot(name, cur ++ listRelParquet(name).filterNot(b))
-    }
-  }
-
-  /** Bucketed ingest: hash-bucket the table by `bucketCols` into `numBuckets`
-    * files, sorted within buckets. Joins and aggregations between tables
-    * bucketed the same way on the same keys then run WITHOUT a shuffle —
-    * the co-located-join layout that matters most at 100 TB (a fact-fact
-    * join at that scale is otherwise a full-network shuffle of both sides).
-    *
-    * Registered in the Spark session catalog (bucketing metadata lives
-    * there); data files land under the warehouse dir configured by the
-    * session. Batch-validates like [[write]].
-    */
-  /** Directory-partitioned append ingest (`{table}/{col}={value}/...`):
-    * coarse-grained data skipping — filters on the partition columns prune
-    * whole directories before any file is opened (PartitionFilters in the
-    * scan, asserted in DBSpec). The complement of the range-sort layout:
-    * partition on low-cardinality operational keys (date, category),
-    * range-sort within partitions for row-group pruning on the rest.
-    */
-  def writePartitioned(name: String, df: DataFrame,
-      partitionCols: Seq[String]): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
-        schema.fields.map(f => (f.name, f.dataType)).toSeq)
-      throw new IllegalArgumentException("Mismatched data type")
-    val anyNull = schema.fieldNames.map(col(_).isNull).reduce(_ || _)
-    if (!df.filter(anyNull).isEmpty)
-      throw new IllegalArgumentException("Mismatched data type")
-    // partition columns FIRST in the in-partition sort: the dynamic-
-    // partition writer requires ordering by them, so leading with them
-    // means our sort satisfies that requirement (no second SortExec) and
-    // the data-column ordering inside each directory is preserved exactly
-    val sortCols = (partitionCols ++
-      schema.fieldNames.filterNot(partitionCols.contains)).map(col)
-    // snapshot-committed tables: record the physical listing BEFORE the
-    // append so only THIS batch's files join the manifest — residue from
-    // a crashed merge must stay invisible, not get adopted
-    val before = if (Files.exists(snapshotPath(name)))
-      Some(listRelParquet(name).toSet) else None
-    nullGuarded(df, schema).repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions(sortCols: _*)
-      .write
-      .mode("append")
-      .option("compression", "lz4")
-      .partitionBy(partitionCols: _*)
-      .parquet(tableDir(name).toString)
-    before.foreach { b =>
-      val cur = snapshotFiles(name).get
-      commitSnapshot(name, cur ++ listRelParquet(name).filterNot(b))
-    }
-  }
-
   /** Partition-preserving compaction — the small-files remedy for
     * DIRECTORY-PARTITIONED tables, where [[compact]]'s whole-table
     * range-sort rewrite would flatten the layout (and with it every
     * PartitionFilters prune). Each partition's committed files are
     * rewritten into one output file per partition (append-only new
     * generation, partition columns re-derived from the directory names),
-    * then a SINGLE snapshot-manifest swap commits every compacted
-    * partition at once — readers see the complete old file set or the
-    * complete new one, exactly the [[upsertPartitioned]] discipline. At
-    * 100 TB this is the nightly maintenance job: N streaming appends
+    * then ONE [[commit]] replaces every compacted partition's files at
+    * once — readers see the complete old file set or the complete new
+    * one. Victims stay referenced by the pre-compaction retained manifest
+    * (time travel must still see that layout) until [[expireSnapshots]].
+    * At 100 TB this is the nightly maintenance job: N streaming appends
     * leave N small files per partition whose row-group stats overlap;
     * compaction restores one well-sorted file per partition without ever
     * taking the table offline or touching partitions that are already
@@ -869,19 +730,8 @@ final class DB private (val root: Path, val spark: SparkSession) {
     * Returns (committedFilesBefore, committedFilesAfter).
     */
   def compactPartitions(name: String): (Int, Int) = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    val dir = tableDir(name)
-    if (!Files.exists(dir)) return (0, 0)
-    val current = snapshotFiles(name).getOrElse(listRelParquet(name))
-    val currentSet = current.toSet
-    // sweep uncommitted residue first (crashed merge/compact leftovers);
-    // retained-manifest generations stay (tableAsOf / expireSnapshots)
-    if (Files.exists(snapshotPath(name))) {
-      val retained = retainedFiles(name)
-      listRelParquet(name).filterNot(retained)
-        .foreach(f => Files.deleteIfExists(dir.resolve(f)))
-    }
+    val schema = schemaOf(name)
+    val current = snapshotFiles(name).getOrElse(Nil)
     val byPart = current.groupBy(parentRel)
     require(!byPart.contains(""),
       s"compactPartitions requires a directory-partitioned table; " +
@@ -890,45 +740,35 @@ final class DB private (val root: Path, val spark: SparkSession) {
     if (victims.isEmpty) return (current.size, current.size)
     // partition column names, from the directory structure itself
     val partitionCols = victims.head._1.split('/').map(_.split("=")(0)).toSeq
-    val victimFiles = victims.values.flatten.toSeq
-    spark.read.option("basePath", dir.toString).schema(schema)
-      .parquet(victimFiles.map(f => dir.resolve(f).toString): _*)
-      .repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions((partitionCols ++
-        schema.fieldNames.filterNot(partitionCols.contains)).map(col): _*)
-      .write.mode("append").option("compression", "lz4")
-      .partitionBy(partitionCols: _*)
-      .parquet(dir.toString)
-    val newFiles = listRelParquet(name).filterNot(currentSet)
-    val compactedDirs = victims.keySet
-    val kept = current.filterNot(f => compactedDirs.contains(parentRel(f)))
-    commitSnapshot(name, kept ++ newFiles) // ← THE commit point
-    // victims remain referenced by the pre-compaction retained manifest;
-    // expireSnapshots reclaims them (compaction changes LAYOUT, and
-    // time travel must still see the pre-compaction layout)
-    (current.size, kept.size + newFiles.size)
+    commit(name, _ => f => victims.contains(parentRel(f))) {
+      appendPartitioned(name, schema,
+        read(name, victims.values.flatten.toSeq), partitionCols)
+    }
+    (current.size, snapshotFiles(name).getOrElse(Nil).size)
   }
 
   /** session-catalog identifier for a bucketed table, unique per DB root */
   private def bucketedName(name: String): String =
     s"graft_${name}_${java.lang.Integer.toHexString(root.toString.hashCode)}"
 
+  /** Bucketed ingest: hash-bucket the table by `bucketCols` into `numBuckets`
+    * files, sorted within buckets. Joins and aggregations between tables
+    * bucketed the same way on the same keys then run WITHOUT a shuffle —
+    * the co-located-join layout that matters most at 100 TB (a fact-fact
+    * join at that scale is otherwise a full-network shuffle of both sides).
+    *
+    * Registered in the Spark session catalog (bucketing metadata lives
+    * there) as an external table under `{root}/{name}.bucketed`, outside
+    * the manifest-committed table dir. Batch-validates like [[write]].
+    */
   def writeBucketed(name: String, df: DataFrame, numBuckets: Int,
       bucketCols: Seq[String]): Unit = {
-    val schema = tables.getOrElse(name,
-      throw new IllegalArgumentException(s"Table not found: $name"))
-    if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq !=
-        schema.fields.map(f => (f.name, f.dataType)).toSeq)
-      throw new IllegalArgumentException("Mismatched data type")
-    val anyNull = schema.fieldNames.map(col(_).isNull).reduce(_ || _)
-    if (!df.filter(anyNull).isEmpty)
-      throw new IllegalArgumentException("Mismatched data type")
+    val (_, guarded) = validated(name, df)
     val cat = bucketedName(name)
     spark.sql(s"DROP TABLE IF EXISTS $cat")
-    nullGuarded(df, schema).write
+    guarded.write
       .mode("overwrite")
       .option("compression", "lz4")
-      // external table: data lives under the DB root, not the warehouse dir
       .option("path", tableDir(s"$name.bucketed").toString)
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)

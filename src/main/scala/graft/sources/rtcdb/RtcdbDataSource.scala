@@ -118,14 +118,8 @@ class RtcdbScanBuilder(root: String, table: String, declared: StructType,
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     // accept comparisons on declared columns for block pruning; zone maps
     // are conservative, so EVERY filter stays a residual for row-level eval
-    pushed = filters.filter {
-      case EqualTo(a, _)            => declared.fieldNames.contains(a)
-      case GreaterThan(a, _)        => declared.fieldNames.contains(a)
-      case GreaterThanOrEqual(a, _) => declared.fieldNames.contains(a)
-      case LessThan(a, _)           => declared.fieldNames.contains(a)
-      case LessThanOrEqual(a, _)    => declared.fieldNames.contains(a)
-      case _ => false
-    }
+    pushed = filters.filter(f =>
+      RtcdbPruning.filterColumn(f).exists(declared.fieldNames.contains))
     filters
   }
   override def pushedFilters(): Array[Filter] = pushed
@@ -231,10 +225,7 @@ class RtcdbAggScan(root: String, table: String, declared: StructType,
     // same empty view either way, but say so loudly (see RtcdbFormat)
     RtcdbFormat.warnIfAbsentIndexes(Paths.get(root), table,
       declared.fieldNames.toSeq, "rtcdb agg scan")
-    val nBlocks = declared.fieldNames.map { c =>
-      val p = indexPath(Paths.get(root), table, c)
-      if (Files.exists(p)) (Files.size(p) / IndexEntryBytes).toInt else 0
-    }.minOption.getOrElse(0)
+    val nBlocks = RtcdbPlanning.committedBlocks(root, table, declared)
     if (nBlocks == 0) return Array.empty
     val involved = specs.map {
       case RtcdbCountAll(via) => via
@@ -243,13 +234,8 @@ class RtcdbAggScan(root: String, table: String, declared: StructType,
     }.distinct
     val paths = involved.map(c =>
       c -> indexPath(Paths.get(root), table, c).toString).toMap
-    val parallelism = org.apache.spark.sql.SparkSession.active
-      .sparkContext.defaultParallelism
-    val slices = math.max(1, math.min(nBlocks, parallelism))
-    val per = math.ceil(nBlocks.toDouble / slices).toInt
-    (0 until nBlocks by per).map(s =>
-      RtcdbAggPartition(specs, paths, s, math.min(s + per, nBlocks))
-        : InputPartition).toArray
+    RtcdbPlanning.slices(0, nBlocks).map { case (s, e) =>
+      RtcdbAggPartition(specs, paths, s, e): InputPartition }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -321,6 +307,16 @@ object RtcdbScanStats {
   * executor readers (zone-map evaluation) use the identical predicates
   */
 object RtcdbPruning extends Serializable {
+
+  /** the column a pushable comparison constrains (None: not pushable) */
+  def filterColumn(f: Filter): Option[String] = f match {
+    case EqualTo(a, _)            => Some(a)
+    case GreaterThan(a, _)        => Some(a)
+    case GreaterThanOrEqual(a, _) => Some(a)
+    case LessThan(a, _)           => Some(a)
+    case LessThanOrEqual(a, _)    => Some(a)
+    case _ => None
+  }
 
   def guardU64(c: String, e: IndexEntry): Unit = {
     if (java.nio.ByteBuffer.wrap(e.min).getLong < 0 ||
@@ -395,6 +391,77 @@ object RtcdbPruning extends Serializable {
       Array.tabulate(n)(i => java.util.Arrays.copyOfRange(buf,
         i * BloomBytesPerBlock, (i + 1) * BloomBytesPerBlock))
     } finally raf.close()
+  }
+}
+
+/** Driver-side planning shared by the row scan, the aggregate scan and the
+  * micro-batch stream: the committed block count, the per-column specs,
+  * and the split of a block range into input partitions.
+  */
+object RtcdbPlanning {
+
+  /** committed row blocks: the SHORTEST column's index entry count, from
+    * index-file SIZES only (one stat per column). A MISSING index counts
+    * as 0 entries — the rule the commit repair pass applies (RtcdbWrite) —
+    * so the crash window between a first commit's per-column index
+    * publishes reads as the consistent empty/old view.
+    */
+  def committedBlocks(root: String, table: String, declared: StructType): Int =
+    declared.fieldNames.map { c =>
+      val p = indexPath(Paths.get(root), table, c)
+      if (Files.exists(p)) (Files.size(p) / IndexEntryBytes).toInt else 0
+    }.minOption.getOrElse(0)
+
+  def colSpec(root: String, table: String, declared: StructType,
+      c: String): RtcdbColSpec = {
+    val ip = indexPath(Paths.get(root), table, c)
+    // bloom validity (size equation, RtcdbFormat doc): sidecar block count
+    // must equal THIS column's index entry count exactly — a stale, torn,
+    // or legacy sidecar fails the equation and the scan silently degrades
+    // to zone-map-only pruning. One stat call per column, driver-side.
+    val bp = bloomPath(Paths.get(root), table, c)
+    val bloomValid = Files.exists(bp) && Files.exists(ip) &&
+      Files.size(bp) % BloomBytesPerBlock == 0 &&
+      Files.size(bp) / BloomBytesPerBlock == Files.size(ip) / IndexEntryBytes
+    RtcdbColSpec(c, declared(c).dataType == LongType,
+      dataPath(Paths.get(root), table, c).toString, ip.toString,
+      if (bloomValid) bp.toString else null)
+  }
+
+  /** [lo, hi) as contiguous ranges across the default parallelism; none
+    * when the range is empty (a leading-column range that pruned every
+    * block, or a micro-batch with no new blocks)
+    */
+  def slices(lo: Int, hi: Int): Seq[(Int, Int)] = {
+    if (hi <= lo) return Seq.empty
+    val parallelism = org.apache.spark.sql.SparkSession.active
+      .sparkContext.defaultParallelism
+    val per = math.ceil((hi - lo).toDouble /
+      math.max(1, math.min(hi - lo, parallelism))).toInt
+    (lo until hi by per).map(s => (s, math.min(s + per, hi)))
+  }
+
+  /** Row-scan partitions over blocks [lo, hi): executors bulk-read their
+    * own 40 B/block/column index slices and zone-map filter there — the
+    * driver never materializes per-block entries. Output columns are the
+    * required schema, or the first declared column for count-only scans
+    * (row counts still need one column); filter columns outside the output
+    * only have their index read.
+    */
+  def rowPartitions(root: String, table: String, declared: StructType,
+      required: StructType, pushed: Array[Filter],
+      runtimeInSets: Map[String, Array[Long]], lo: Int,
+      hi: Int): Array[InputPartition] = {
+    val outNames =
+      if (required.fieldNames.isEmpty) Array(declared.fieldNames.head)
+      else required.fieldNames
+    val filterCols = (pushed.flatMap(RtcdbPruning.filterColumn) ++
+      runtimeInSets.keys).distinct.filterNot(outNames.contains)
+    val outputCols = outNames.map(colSpec(root, table, declared, _))
+    val filterOnly = filterCols.map(colSpec(root, table, declared, _))
+    slices(lo, hi).map { case (s, e) =>
+      RtcdbInputPartition(outputCols, filterOnly, s, e, pushed,
+        runtimeInSets): InputPartition }.toArray
   }
 }
 
@@ -479,42 +546,20 @@ class RtcdbScan(root: String, table: String, declared: StructType,
     }.toMap
   }
 
-  /** columns the reader must materialize: the required schema, or the first
-    * declared column for count-only scans (row counts still need one column)
-    */
-  private def outputColNames: Array[String] =
-    if (required.fieldNames.isEmpty) Array(declared.fieldNames.head)
-    else required.fieldNames
-
   private def isLongCol(name: String): Boolean =
     declared(name).dataType == LongType
 
-  private def colSpec(c: String): RtcdbColSpec = {
-    val ip = indexPath(Paths.get(root), table, c)
-    // bloom validity (size equation, RtcdbFormat doc): sidecar block count
-    // must equal THIS column's index entry count exactly — a stale, torn,
-    // or legacy sidecar fails the equation and the scan silently degrades
-    // to zone-map-only pruning. One stat call per column, driver-side.
-    val bp = bloomPath(Paths.get(root), table, c)
-    val bloomValid = Files.exists(bp) && Files.exists(ip) &&
-      Files.size(bp) % BloomBytesPerBlock == 0 &&
-      Files.size(bp) / BloomBytesPerBlock == Files.size(ip) / IndexEntryBytes
-    RtcdbColSpec(c, isLongCol(c),
-      dataPath(Paths.get(root), table, c).toString, ip.toString,
-      if (bloomValid) bp.toString else null)
-  }
-
   // ── driver-side binary search on the leading (sorted) column ───────────
-  // Under the format's sort contract the leading column's per-block mins
-  // AND maxes are non-decreasing, so each conservative block predicate
-  // (the same ones blockMayMatch evaluates) is monotone over the block
-  // sequence — a lower-bound binary search locates its boundary in
-  // ⌈log₂ n⌉ single-entry probes. Executors re-evaluate every filter per
-  // block inside the returned range, so the search can only SKIP
-  // provably-empty prefixes/suffixes, never admit a wrong row. Disable
-  // via spark.graft.rtcdb.assumeSorted=false for tables written outside
-  // the sort contract (planning then degrades to full-range, with all
-  // pruning still executor-side).
+  // While the leading column's per-block mins AND maxes are non-decreasing
+  // — which both writers check on every append, marking the table
+  // `{table}.unsorted` otherwise (RtcdbFormat.OrderGuard) — each
+  // conservative block predicate (the same ones blockMayMatch evaluates)
+  // is monotone over the block sequence, so a lower-bound binary search
+  // locates its boundary in ⌈log₂ n⌉ single-entry probes. Executors
+  // re-evaluate every filter per block inside the returned range, so the
+  // search can only SKIP provably-empty prefixes/suffixes, never admit a
+  // wrong row. A marked table plans the full range, with all pruning
+  // still executor-side.
   private def probe(raf: RandomAccessFile, b: Int): IndexEntry = {
     raf.seek(b.toLong * IndexEntryBytes)
     val buf = new Array[Byte](IndexEntryBytes)
@@ -540,17 +585,9 @@ class RtcdbScan(root: String, table: String, declared: StructType,
   /** block range [lo, hi) that may satisfy all leading-column filters */
   private def leadingRange(nBlocks: Int): (Int, Int) = {
     val leading = declared.fieldNames.head
-    val fs = pushed.filter {
-      case EqualTo(a, _) => a == leading
-      case GreaterThan(a, _) => a == leading
-      case GreaterThanOrEqual(a, _) => a == leading
-      case LessThan(a, _) => a == leading
-      case LessThanOrEqual(a, _) => a == leading
-      case _ => false
-    }
-    val assumeSorted = org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.graft.rtcdb.assumeSorted", "true") == "true"
-    if (fs.isEmpty || !assumeSorted) return (0, nBlocks)
+    val fs = pushed.filter(RtcdbPruning.filterColumn(_).contains(leading))
+    if (fs.isEmpty || Files.exists(unsortedPath(Paths.get(root), table)))
+      return (0, nBlocks)
     val raf = new RandomAccessFile(
       indexPath(Paths.get(root), table, leading).toString, "r")
     try {
@@ -623,10 +660,7 @@ class RtcdbScan(root: String, table: String, declared: StructType,
     // same empty view either way, but say so loudly (see RtcdbFormat)
     RtcdbFormat.warnIfAbsentIndexes(Paths.get(root), table,
       declared.fieldNames.toSeq, "rtcdb row scan")
-    val nBlocks = declared.fieldNames.map { c =>
-      val p = indexPath(Paths.get(root), table, c)
-      if (Files.exists(p)) (Files.size(p) / IndexEntryBytes).toInt else 0
-    }.minOption.getOrElse(0)
+    val nBlocks = RtcdbPlanning.committedBlocks(root, table, declared)
     if (nBlocks == 0) return Array.empty
 
     // README.md:54's declared binary search: O(log n) driver probes
@@ -634,32 +668,8 @@ class RtcdbScan(root: String, table: String, declared: StructType,
     RtcdbScanStats.prunedBlocks.addAndGet((nBlocks - (hi - lo)).toLong)
     if (runtimeInSets.nonEmpty)
       RtcdbScanStats.runtimeFilteredScans.incrementAndGet()
-    if (lo >= hi) return Array.empty
-
-    val outNames = outputColNames
-    val filterCols = (pushed.flatMap {
-      case EqualTo(a, _) => Some(a)
-      case GreaterThan(a, _) => Some(a)
-      case GreaterThanOrEqual(a, _) => Some(a)
-      case LessThan(a, _) => Some(a)
-      case LessThanOrEqual(a, _) => Some(a)
-      case _ => None
-    } ++ runtimeInSets.keys).distinct.filterNot(outNames.contains)
-
-    val outputCols = outNames.map(colSpec)
-    val filterOnly = filterCols.map(colSpec)
-
-    // contiguous block ranges across the default parallelism; executors
-    // bulk-read their own 40 B/block/column index slices and zone-map
-    // filter there — the driver never materializes per-block entries
-    val total = hi - lo
-    val parallelism = org.apache.spark.sql.SparkSession.active
-      .sparkContext.defaultParallelism
-    val slices = math.max(1, math.min(total, parallelism))
-    val per = math.ceil(total.toDouble / slices).toInt
-    (lo until hi by per).map(s =>
-      RtcdbInputPartition(outputCols, filterOnly, s, math.min(s + per, hi),
-        pushed, runtimeInSets): InputPartition).toArray
+    RtcdbPlanning.rowPartitions(root, table, declared, required, pushed,
+      runtimeInSets, lo, hi)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -707,10 +717,7 @@ class RtcdbMicroBatchStream(root: String, table: String,
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
   private def committedBlocks: Int =
-    declared.fieldNames.map { c =>
-      val p = indexPath(Paths.get(root), table, c)
-      if (Files.exists(p)) (Files.size(p) / IndexEntryBytes).toInt else 0
-    }.minOption.getOrElse(0)
+    RtcdbPlanning.committedBlocks(root, table, declared)
 
   // AvailableNow pins its catch-up target ONCE at query start: blocks
   // appended while the drain runs belong to the next run, and the drain
@@ -741,43 +748,12 @@ class RtcdbMicroBatchStream(root: String, table: String,
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 
-  private def colSpec(c: String): RtcdbColSpec = {
-    val ip = indexPath(Paths.get(root), table, c)
-    val bp = bloomPath(Paths.get(root), table, c)
-    val bloomValid = Files.exists(bp) && Files.exists(ip) &&
-      Files.size(bp) % BloomBytesPerBlock == 0 &&
-      Files.size(bp) / BloomBytesPerBlock == Files.size(ip) / IndexEntryBytes
-    RtcdbColSpec(c, declared(c).dataType == LongType,
-      dataPath(Paths.get(root), table, c).toString, ip.toString,
-      if (bloomValid) bp.toString else null)
-  }
-
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = {
     val lo = start.asInstanceOf[RtcdbStreamOffset].blocks
     val hi = end.asInstanceOf[RtcdbStreamOffset].blocks
-    if (lo >= hi) return Array.empty
-    val outNames =
-      if (required.fieldNames.isEmpty) Array(declared.fieldNames.head)
-      else required.fieldNames
-    val filterCols = pushed.flatMap {
-      case EqualTo(a, _) => Some(a)
-      case GreaterThan(a, _) => Some(a)
-      case GreaterThanOrEqual(a, _) => Some(a)
-      case LessThan(a, _) => Some(a)
-      case LessThanOrEqual(a, _) => Some(a)
-      case _ => None
-    }.distinct.filterNot(outNames.contains)
-    val outputCols = outNames.map(colSpec)
-    val filterOnly = filterCols.map(colSpec)
-    val total = hi - lo
-    val parallelism = org.apache.spark.sql.SparkSession.active
-      .sparkContext.defaultParallelism
-    val slices = math.max(1, math.min(total, parallelism))
-    val per = math.ceil(total.toDouble / slices).toInt
-    (lo until hi by per).map(s =>
-      RtcdbInputPartition(outputCols, filterOnly, s, math.min(s + per, hi),
-        pushed, Map.empty): InputPartition).toArray
+    RtcdbPlanning.rowPartitions(root, table, declared, required, pushed,
+      Map.empty, lo, hi)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -856,15 +832,7 @@ class RtcdbPartitionReader(part: RtcdbInputPartition, countOnly: Boolean)
       }
     }
     val zoneOk = part.pushed.forall { f =>
-      val name = f match {
-        case EqualTo(a, _) => a
-        case GreaterThan(a, _) => a
-        case GreaterThanOrEqual(a, _) => a
-        case LessThan(a, _) => a
-        case LessThanOrEqual(a, _) => a
-        case _ => ""
-      }
-      name.isEmpty || colEntry(name).forall { case (c, e) =>
+      RtcdbPruning.filterColumn(f).flatMap(colEntry).forall { case (c, e) =>
         RtcdbPruning.blockMayMatch(c.name, c.isLong, e, f)
       }
     } && part.runtimeInSets.forall { case (name, keys) =>

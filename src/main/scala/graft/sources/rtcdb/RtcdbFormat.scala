@@ -216,6 +216,50 @@ object RtcdbFormat {
     }.toSeq
   }
 
+  /** `{table}.unsorted` — an empty marker saying the leading column's
+    * blocks are NOT in order (some block's min falls below the previous
+    * block's max), so the driver's binary search over the leading index
+    * would skip matching blocks. Readers that find it plan the full block
+    * range; executors still prune every block by its zone map. OUR
+    * extension, additive like the bloom sidecar; a truncating write
+    * deletes it.
+    */
+  def unsortedPath(root: Path, table: String): Path =
+    root.resolve(s"$table.unsorted")
+
+  /** The leading-column order check both writers run on every block they
+    * append, in order: seeded with the table's current last index entry,
+    * it creates the fsync'd [[unsortedPath]] marker on the first block
+    * whose min sorts below the previous block's max. Call [[append]]
+    * BEFORE publishing that block's index entry, so no reader can see an
+    * out-of-order entry without the marker.
+    */
+  final class OrderGuard(root: Path, table: String, lead: StructField) {
+    private val marker = unsortedPath(root, table)
+    private var marked = Files.exists(marker)
+    private var prevMax: Array[Byte] = {
+      val ip = indexPath(root, table, lead.name)
+      val n = if (Files.exists(ip)) (Files.size(ip) / IndexEntryBytes).toInt else 0
+      if (marked || n == 0) null
+      else RtcdbPruning.readEntryRange(ip.toString, n - 1, n).head.max
+    }
+    private def below(a: Array[Byte], b: Array[Byte]): Boolean =
+      if (lead.dataType == LongType)
+        ByteBuffer.wrap(a).getLong < ByteBuffer.wrap(b).getLong
+      else compareBytes(a, b) < 0
+
+    def append(min: Array[Byte], max: Array[Byte]): Unit = {
+      if (!marked && prevMax != null && below(min, prevMax)) {
+        val ch = java.nio.channels.FileChannel.open(marker,
+          java.nio.file.StandardOpenOption.CREATE,
+          java.nio.file.StandardOpenOption.WRITE)
+        try ch.force(true) finally ch.close()
+        marked = true
+      }
+      prevMax = max
+    }
+  }
+
   def dataPath(root: Path, table: String, col: String): Path =
     root.resolve(s"$table.$col.data")
   def indexPath(root: Path, table: String, col: String): Path =
@@ -294,6 +338,7 @@ object RtcdbFormat {
       if (ok) new RandomAccessFile(bloomPath(rootP, table, f.name).toFile, "rw")
       else null
     }
+    val order = new OrderGuard(rootP, table, schema.fields.head)
     try {
       val positions = dataFiles.map(_.length())
       dataFiles.foreach(f => f.seek(f.length()))
@@ -331,6 +376,7 @@ object RtcdbFormat {
           val entry = IndexEntry(positions(ci), comp.length.toLong, raw.length.toLong,
             if (field.dataType == LongType) longToBytes8(minL) else minB,
             if (field.dataType == LongType) longToBytes8(maxL) else maxB)
+          if (ci == 0) order.append(entry.min, entry.max)
           indexFiles(ci).write(entry.toBytes)
           if (bloomFiles(ci) != null) bloomFiles(ci).write(bloom)
           positions(ci) += comp.length

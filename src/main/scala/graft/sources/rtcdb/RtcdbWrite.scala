@@ -112,10 +112,13 @@ class RtcdbBatchWrite(root: String, table: String, schema: StructType,
         writeMetadata(rootP, existing :+
           (table -> StructType(schema.fields.map(_.copy(nullable = false)))))
     }
-    if (truncate) schema.fieldNames.foreach { c =>
-      Files.deleteIfExists(dataPath(rootP, table, c))
-      Files.deleteIfExists(indexPath(rootP, table, c))
-      Files.deleteIfExists(bloomPath(rootP, table, c))
+    if (truncate) {
+      schema.fieldNames.foreach { c =>
+        Files.deleteIfExists(dataPath(rootP, table, c))
+        Files.deleteIfExists(indexPath(rootP, table, c))
+        Files.deleteIfExists(bloomPath(rootP, table, c))
+      }
+      Files.deleteIfExists(unsortedPath(rootP, table))
     }
     // Repair pass: a crash BETWEEN a prior commit's per-column index
     // renames leaves columns at different commit generations (one column
@@ -225,6 +228,11 @@ class RtcdbBatchWrite(root: String, table: String, schema: StructType,
         }
         entryBuf.toByteArray
       }
+    // the leading column's new blocks, checked against the (repaired)
+    // committed tail before any index entry is published
+    val order = new OrderGuard(rootP, table, schema.fields.head)
+    newEntries(0).grouped(IndexEntryBytes).map(IndexEntry.fromBytes)
+      .foreach(e => order.append(e.min, e.max))
     schema.fieldNames.zipWithIndex.foreach { case (c, ci) =>
       publishIndex(rootP, indexPath(rootP, table, c)) { tmp =>
         Files.write(tmp, newEntries(ci), StandardOpenOption.APPEND)

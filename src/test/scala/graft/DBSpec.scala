@@ -311,9 +311,8 @@ class DBSpec extends AnyFunSuite with SparkFixture {
     }
     val before = db.table("events").collect().map(_.toSeq).toSet
     assert(before.size == 900)
-    // plus uncommitted residue from a "crashed" merge — must be swept,
-    // never adopted (needs a manifest to be distinguishable, so seed one
-    // with a real merge first)
+    // a real merge, then uncommitted residue from a "crashed" one — it
+    // must be swept, never adopted
     db.upsertPartitioned("events",
       s.createDataFrame(Seq(Row("ev1", 1700000001L, 1001L)).asJava,
         eventsSchema), Seq("event"), Seq("event", "id"))
@@ -358,33 +357,33 @@ class DBSpec extends AnyFunSuite with SparkFixture {
     val rows = (1L to 100L).map(i => Row(s"ev${i % 2}", 1700000000L + i, i))
     db.writePartitioned("events",
       s.createDataFrame(rows.asJava, eventsSchema), Seq("event"))
-    // v1: first merge adopts the live listing and commits id=1 -> ts 111
+    // v1 is the append; v2: first merge commits id=1 -> ts 111
     db.upsertPartitioned("events",
       s.createDataFrame(Seq(Row("ev1", 111L, 1L)).asJava, eventsSchema),
       Seq("event"), Seq("event", "id"))
-    // v2: id=1 -> ts 222
+    // v3: id=1 -> ts 222
     db.upsertPartitioned("events",
       s.createDataFrame(Seq(Row("ev1", 222L, 1L)).asJava, eventsSchema),
       Seq("event"), Seq("event", "id"))
-    assert(db.snapshotVersions("events") == Seq(1L, 2L))
+    assert(db.snapshotVersions("events") == Seq(1L, 2L, 3L))
     def ts1(df: org.apache.spark.sql.DataFrame): Long =
       df.filter(col("id") === 1L).collect().map(_.getLong(1)).head
-    // current == v2; v1 still readable with the OLD value of id=1 and
+    // current == v3; v2 still readable with the OLD value of id=1 and
     // the full row count (time travel is a complete consistent view)
     assert(ts1(db.table("events")) == 222L)
-    assert(ts1(db.tableAsOf("events", 2L)) == 222L)
-    assert(ts1(db.tableAsOf("events", 1L)) == 111L)
-    assert(db.tableAsOf("events", 1L).count() == 100L)
+    assert(ts1(db.tableAsOf("events", 3L)) == 222L)
+    assert(ts1(db.tableAsOf("events", 2L)) == 111L)
+    assert(db.tableAsOf("events", 2L).count() == 100L)
     // unknown version: loud error naming what IS retained
     val e = intercept[IllegalArgumentException] { db.tableAsOf("events", 7L) }
-    assert(e.getMessage.contains("retained: 1, 2"), e.getMessage)
-    // expire v1: its manifest goes away, its exclusive files are
-    // reclaimed, v2 (the pointer) is untouched
+    assert(e.getMessage.contains("retained: 1, 2, 3"), e.getMessage)
+    // expire v1 and v2: their manifests go away, their exclusive files
+    // are reclaimed, v3 (the pointer) is untouched
     val (expired, reclaimed) = db.expireSnapshots("events", keepLast = 1)
-    assert(expired == 1, s"expired $expired")
+    assert(expired == 2, s"expired $expired")
     assert(reclaimed >= 1, "superseded generation files must be reclaimed")
-    assert(db.snapshotVersions("events") == Seq(2L))
-    intercept[IllegalArgumentException] { db.tableAsOf("events", 1L) }
+    assert(db.snapshotVersions("events") == Seq(3L))
+    intercept[IllegalArgumentException] { db.tableAsOf("events", 2L) }
     assert(ts1(db.table("events")) == 222L) // current view unaffected
     // disk now agrees with the retained set exactly
     val keep = db.snapshotFiles("events").get.toSet
@@ -396,8 +395,100 @@ class DBSpec extends AnyFunSuite with SparkFixture {
     assert(physical == keep, s"orphans: ${physical.diff(keep)}")
     // a reopened DB (fresh process) sees the same retained history
     val db2 = DB.open(root)
-    assert(db2.snapshotVersions("events") == Seq(2L))
-    assert(ts1(db2.tableAsOf("events", 2L)) == 222L)
+    assert(db2.snapshotVersions("events") == Seq(3L))
+    assert(ts1(db2.tableAsOf("events", 3L)) == 222L)
+  }
+
+  /** the files a read of `name` scans, relative to its table dir */
+  private def filesRead(db: DB, root: String, name: String): Set[String] = {
+    val dir = java.nio.file.Paths.get(root, name)
+    db.table(name).inputFiles.map(u =>
+      dir.relativize(java.nio.file.Paths.get(new java.net.URI(u))).toString).toSet
+  }
+
+  test("every write verb commits one version, and reads scan exactly its manifest") {
+    implicit val s = spark
+    import scala.jdk.CollectionConverters._
+    import s.implicits._
+    val scdSchema = StructType(Seq(
+      StructField("k", LongType, nullable = false),
+      StructField("v", StringType, nullable = false),
+      StructField("valid_from", LongType, nullable = false),
+      StructField("valid_to", LongType, nullable = false)))
+    val root = freshDir("manifestonly")
+    val db = DB.init(root, Seq("flat" -> eventsSchema,
+      "parts" -> eventsSchema, "scd" -> scdSchema))
+    def rows(from: Long, until: Long) = s.createDataFrame(
+      (from until until).map(i => Row(s"ev${i % 3}", 1000L + i, i)).asJava,
+      eventsSchema)
+    var versions = Map.empty[String, Long].withDefaultValue(0L)
+    def check(verb: String, name: String, count: Long): Unit = {
+      versions += name -> (versions(name) + 1)
+      assert(db.snapshotVersions(name).lastOption.contains(versions(name)),
+        s"$verb must commit exactly one version of $name: " +
+          db.snapshotVersions(name))
+      val manifest = db.snapshotFiles(name).get.toSet
+      assert(manifest.nonEmpty, s"$verb left $name empty")
+      assert(filesRead(db, root, name) == manifest, s"after $verb on $name")
+      assert(db.table(name).count() == count, s"after $verb on $name")
+    }
+    db.write("flat", (0L until 10L).map(i => Row(s"ev$i", 1000L + i, i)))
+    check("write(rows)", "flat", 10L)
+    db.write("flat", rows(10L, 20L))
+    check("write(df)", "flat", 20L)
+    db.writeZOrdered("flat", rows(20L, 30L), "timestamp", "id")
+    check("writeZOrdered", "flat", 30L)
+    db.upsert("flat", rows(25L, 35L), Seq("id"))
+    check("upsert", "flat", 35L)
+    db.delete("flat", Seq(0L, 1L).toDF("id"), Seq("id"))
+    check("delete", "flat", 33L)
+    db.write("flat", rows(40L, 50L))
+    check("write(df)", "flat", 43L)
+    db.compact("flat")
+    check("compact", "flat", 43L)
+    db.writePartitioned("parts", rows(0L, 30L), Seq("event"))
+    check("writePartitioned", "parts", 30L)
+    db.upsertPartitioned("parts", rows(25L, 35L), Seq("event"),
+      Seq("event", "id"))
+    check("upsertPartitioned", "parts", 35L)
+    db.writePartitioned("parts", rows(40L, 50L), Seq("event"))
+    check("writePartitioned", "parts", 45L)
+    db.compactPartitions("parts")
+    check("compactPartitions", "parts", 45L)
+    db.upsertScd2("scd", Seq(1L -> "a", 2L -> "b").toDF("k", "v"), Seq("k"),
+      version = 1L)
+    check("upsertScd2", "scd", 2L)
+    db.upsertScd2("scd", Seq(1L -> "a2").toDF("k", "v"), Seq("k"),
+      version = 2L)
+    check("upsertScd2", "scd", 3L)
+  }
+
+  test("crash residue in a never-committed table is never read and is swept by the first commit") {
+    implicit val s = spark
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.functions.col
+    val root = freshDir("firstcommit")
+    val db = DB.init(root, Seq("events" -> eventsSchema))
+    // a first-ever partitioned merge that failed after its data write:
+    // part files in the table dir, no manifest
+    s.createDataFrame(Seq(Row("ev1", 777L, 1L), Row("ev2", 777L, 2L)).asJava,
+        eventsSchema)
+      .write.mode("append").partitionBy("event").parquet(s"$root/events")
+    assert(db.snapshotFiles("events").isEmpty)
+    assert(db.table("events").isEmpty, "uncommitted residue must read as empty")
+    db.upsertPartitioned("events",
+      s.createDataFrame(Seq(Row("ev1", 111L, 1L)).asJava, eventsSchema),
+      Seq("event"), Seq("event", "id"))
+    val t = db.table("events")
+    assert(t.collect().map(_.toSeq).toSet == Set(Seq("ev1", 111L, 1L)))
+    assert(t.filter(col("timestamp") === 777L).isEmpty)
+    assert(db.snapshotVersions("events") == Seq(1L))
+    val physical = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "events"))
+      .iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      .map(f => java.nio.file.Paths.get(root, "events").relativize(f).toString)
+      .toSet
+    assert(physical == db.snapshotFiles("events").get.toSet,
+      s"residue not swept: ${physical.diff(db.snapshotFiles("events").get.toSet)}")
   }
 
   test("leading-column filter reaches the parquet scan as a pushed filter") {

@@ -779,4 +779,96 @@ class RtcdbSourceSpec extends AnyFunSuite with SparkFixture {
     }
     assert(readEvents(root).count() == 100L)
   }
+
+  private val keyedSchema = StructType(Seq(
+    StructField("k", LongType, nullable = false),
+    StructField("v", LongType, nullable = false)))
+
+  private def keyedStore(tag: String): String = {
+    val dir = Files.createTempDirectory(s"rtcdb_$tag")
+    RtcdbFormat.writeMetadata(dir, Seq("t" -> keyedSchema))
+    dir.toString
+  }
+
+  private def keyRows(ks: Seq[Long]): Seq[Row] = ks.map(k => Row(k, k * 2))
+
+  test("leading-column filters stay exact on overlapping appends (unsorted marker)") {
+    // two sorted appends of k = 0..4095: the second append's first block
+    // starts below the first append's last max, so the leading index is
+    // not in block order and the binary search would skip matching blocks
+    def check(root: String): Unit = {
+      assert(Files.exists(RtcdbFormat.unsortedPath(Paths.get(root), "t")))
+      val t = spark.read.format("rtcdb").option("path", root)
+        .option("table", "t").load()
+      assert(t.filter(col("k") >= 3096L).count() == 2000L)
+      assert(t.filter(col("k") < 1000L).count() == 2000L)
+      assert(t.filter(col("k") === 10L).count() == 2L)
+    }
+    val serial = keyedStore("overlap_serial")
+    (0 until 2).foreach(_ =>
+      RtcdbFormat.write(serial, "t", keyedSchema, keyRows(0L until 4096L)))
+    check(serial)
+    val s = spark
+    import s.implicits._
+    val dsv2 = keyedStore("overlap_dsv2")
+    (0 until 2).foreach(_ =>
+      (0L until 4096L).map(k => (k, k * 2)).toDF("k", "v")
+        .write.format("rtcdb").option("path", dsv2).option("table", "t")
+        .mode("append").save())
+    check(dsv2)
+    // a truncating write starts a fresh, ordered table: marker gone
+    (0L until 4096L).map(k => (k, k * 2)).toDF("k", "v")
+      .write.format("rtcdb").option("path", dsv2).option("table", "t")
+      .mode("overwrite").save()
+    assert(!Files.exists(RtcdbFormat.unsortedPath(Paths.get(dsv2), "t")))
+  }
+
+  test("a descending serial write is marked unsorted and reads exactly") {
+    val root = keyedStore("descending")
+    RtcdbFormat.write(root, "t", keyedSchema, keyRows((0L until 4096L).reverse))
+    assert(Files.exists(RtcdbFormat.unsortedPath(Paths.get(root), "t")))
+    val t = spark.read.format("rtcdb").option("path", root)
+      .option("table", "t").load()
+    assert(t.filter(col("k") < 1000L).count() == 1000L)
+    assert(t.filter(col("k") >= 3096L).count() == 1000L)
+    assert(t.filter(col("k") === 10L).count() == 1L)
+  }
+
+  test("leading-column filters that prune every block return no rows") {
+    // even keys only, written in order: block b holds 2048*b .. 2048*b+2046,
+    // so 2047 falls in the gap between blocks 0 and 1 and the probe range
+    // is empty, as it is for keys above the max or below the min
+    val root = keyedStore("pruned_all")
+    RtcdbFormat.write(root, "t", keyedSchema, keyRows((0L until 4096L).map(_ * 2)))
+    assert(!Files.exists(RtcdbFormat.unsortedPath(Paths.get(root), "t")))
+    val t = spark.read.format("rtcdb").option("path", root)
+      .option("table", "t").load()
+    assert(t.filter(col("k") >= 1000000000L).count() == 0L)
+    assert(t.filter(col("k") < 0L).count() == 0L)
+    assert(t.filter(col("k") === 2047L).count() == 0L)
+    assert(t.filter(col("k") === 2048L).count() == 1L)
+  }
+
+  test("an append wholly above the table writes no marker and keeps O(log n) probes") {
+    val root = keyedStore("ordered_appends")
+    RtcdbFormat.write(root, "t", keyedSchema, keyRows(0L until 128L * 1024))
+    val s = spark
+    import s.implicits._
+    (128L * 1024 until 256L * 1024).map(k => (k, k * 2)).toDF("k", "v")
+      .write.format("rtcdb").option("path", root).option("table", "t")
+      .mode("append").save()
+    assert(!Files.exists(RtcdbFormat.unsortedPath(Paths.get(root), "t")))
+    RtcdbScanStats.reset()
+    val hit = spark.read.format("rtcdb").option("path", root)
+      .option("table", "t").load()
+      .filter(col("k") >= 131072L && col("k") < 133120L) // 2 mid blocks
+    assert(hit.count() == 2048L)
+    val probes = RtcdbScanStats.driverIndexEntryReads.get()
+    assert(probes > 0 && probes <= 100,
+      s"driver probes=$probes for 256 blocks — expected O(log n)")
+    // task-boundary blocks of the distributed append may be short, so
+    // the two-block key range can straddle a third block
+    assert(RtcdbScanStats.plannedBlocks.get() <= 3,
+      s"planned=${RtcdbScanStats.plannedBlocks.get()}")
+  }
 }
