@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error, when}
+import org.apache.spark.sql.catalyst.expressions.Cast
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{coalesce, col, lit, max, raise_error, when}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The `DB` facade — capability-parity port of the reference's public API
@@ -145,17 +147,21 @@ final class DB private (val root: Path, val spark: SparkSession) {
       .flatMap(v => snapshotFilesAsOf(name, v).getOrElse(Nil))).toSet
 
   /** Delete every data file no retained manifest references (a crashed
-    * write's residue, expired generations). Only a file outside the
-    * current manifest needs the history manifests parsed, so an append-only
-    * table's sweep reads one manifest, not every retained one. Returns
-    * (surviving listing, #files deleted).
+    * write's residue, expired generations), together with the `.{file}.crc`
+    * checksum Hadoop writes beside each file a direct append creates. Only
+    * a file outside the current manifest needs the history manifests
+    * parsed, so an append-only table's sweep reads one manifest, not every
+    * retained one. Returns (surviving listing, #files deleted).
     */
   private def sweep(name: String): (Seq[String], Int) = {
     val current = snapshotFiles(name).getOrElse(Nil).toSet
     lazy val retained = retainedFiles(name)
     val (kept, orphans) =
       listRelParquet(name).partition(f => current(f) || retained(f))
-    orphans.foreach(f => Files.deleteIfExists(tableDir(name).resolve(f)))
+    orphans.map(tableDir(name).resolve).foreach { p =>
+      Files.deleteIfExists(p)
+      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    }
     (kept, orphans.size)
   }
 
@@ -306,14 +312,16 @@ final class DB private (val root: Path, val spark: SparkSession) {
         .otherwise(col(f.name)).as(f.name)
     }.toSeq: _*)
 
-  /** STAGE-AND-VALIDATE in ONE evaluation, for the merge verbs: the shape
-    * check, then the null-guarded projection raises on any null cell while
-    * the batch is staged to an invisible scratch dir — the same whole-batch
-    * abort a pre-scan gives (staging residue is wiped, the table
-    * untouched), but the caller's plan is evaluated exactly once. `body`
-    * reads the staged batch back as tiny parquet instead of re-running that
-    * plan for each of its probes, anti-joins and rewrites (measured on
-    * q150's MV loop: three evaluations were the dominant per-batch cost).
+  /** STAGE-AND-VALIDATE in ONE evaluation, for the merge verbs whose plan
+    * reads the batch more than once ([[upsertPartitioned]]: the touched
+    * tuples, then the merge; [[upsertScd2]]: the change join, its keys and
+    * the new rows): the shape check, then the null-guarded projection
+    * raises on any null cell while the batch is staged to an invisible
+    * scratch dir — the same whole-batch abort a pre-scan gives (staging
+    * residue is wiped, the table untouched), but the caller's plan is
+    * evaluated exactly once. `body` reads the staged batch back as tiny
+    * parquet instead of re-running that plan per consumer. [[upsert]] and
+    * [[delete]] read their batch once and need no staging ([[mergeByKey]]).
     */
   private def staged[T](name: String, df: DataFrame, schema: StructType)(
       body: DataFrame => T): T = {
@@ -436,25 +444,29 @@ final class DB private (val root: Path, val spark: SparkSession) {
     }
   }
 
-  /** Write `df` as the table's new range-sorted contents, replacing every
-    * committed file. The rewrite is staged to `{name}.__rewrite` FIRST (it
-    * reads the generation it supersedes), then only its `.parquet` files
-    * move into the table dir under a `g{version}-` prefix — no `.crc` or
-    * `_SUCCESS` litter — and [[commit]] swaps the manifest. Every rewrite
-    * verb ([[upsert]], [[upsertScd2]], [[delete]], [[compact]]) gets the
-    * same old-or-new durability and time travel as the partitioned merge.
+  /** Write `merge(input)` as the table's new range-sorted contents,
+    * replacing every committed file. The rewrite is staged to
+    * `{name}.__rewrite` FIRST (it reads the generation it supersedes), then
+    * only its `.parquet` files move into the table dir under a
+    * `g{version}-` prefix — no `.crc` or `_SUCCESS` litter — and [[commit]]
+    * swaps the manifest. Every rewrite verb ([[upsert]], [[upsertScd2]],
+    * [[delete]], [[compact]]) gets the same old-or-new durability and time
+    * travel as the partitioned merge.
     *
-    * When the caller doesn't pin a file count, it is derived from the
+    * When the caller doesn't pin a file count n, it is derived from the
     * COMMITTED generation's size (≈ the rewrite's size for merge-style
     * rewrites; superseded-but-retained files must not inflate it): file
     * count scales with data at 100 TB, while a small table rewrites to ONE
-    * file instead of spark.sql.shuffle.partitions shards — an upsert loop
-    * on an MV-sized table otherwise pays a range-sampling job plus a
-    * 32-tiny-file write+read per merge (measured: the dominant cost of
-    * q150's maintenance steps).
+    * file instead of spark.sql.shuffle.partitions shards.
+    *
+    * n = 1 (every table under 128 MB) is `coalesce(1)` BELOW `merge` plus
+    * one in-partition sort: the single partition already satisfies a keyed
+    * merge's clustering, so merge, sort and write run as one task of one
+    * job with no exchange. n > 1 range-partitions `merge`'s output (an
+    * exchange plus its sampling job) into n sorted files.
     */
-  private def atomicRewrite(name: String, df: DataFrame, schema: StructType,
-      nFiles: Option[Int]): Unit = {
+  private def atomicRewrite(name: String, input: DataFrame, schema: StructType,
+      nFiles: Option[Int], merge: DataFrame => DataFrame = identity): Unit = {
     val dir = tableDir(name)
     val sortCols = schema.fieldNames.map(col).toSeq
     val n = nFiles.getOrElse {
@@ -462,10 +474,12 @@ final class DB private (val root: Path, val spark: SparkSession) {
         .map(f => Files.size(dir.resolve(f))).sum
       math.max(1, math.ceil(bytes.toDouble / (128L * 1024 * 1024)).toInt)
     }
+    val partitioned =
+      if (n == 1) merge(input.coalesce(1))
+      else merge(input).repartitionByRange(n, sortCols: _*)
     withScratch(name, "rewrite") { tmp =>
       commit(name, _ => _ => true) {
-        df.repartitionByRange(n, sortCols: _*)
-          .sortWithinPartitions(sortCols: _*)
+        partitioned.sortWithinPartitions(sortCols: _*)
           .write.mode("overwrite").option("compression", "lz4")
           .parquet(tmp.toString)
         Files.createDirectories(dir)
@@ -500,10 +514,15 @@ final class DB private (val root: Path, val spark: SparkSession) {
 
   /** SCD1 upsert (MERGE semantics on plain parquet): rows of `df` REPLACE
     * existing rows sharing the same `keys` values; everything else is
-    * preserved. The batch is [[staged]] (schema equality, whole-batch null
-    * abort, one evaluation) and the merge commits through
-    * [[atomicRewrite]], so readers either see the old table or the
-    * fully-merged one — never a partial state.
+    * preserved, and every batch row lands (duplicate keys inside the batch
+    * included). Schema equality is checked up front; the batch is
+    * [[nullGuarded]], so a null cell aborts the rewrite job before its
+    * commit (the scratch output is wiped, the table untouched). The merge
+    * is one sort-merge pass inside the rewrite ([[mergeByKey]]): the batch
+    * is evaluated once, and a table under 128 MB merges, sorts and writes
+    * in one Spark job. The commit goes through [[atomicRewrite]], so
+    * readers either see the old table or the fully-merged one — never a
+    * partial state.
     *
     * Scale note: this is the rewrite-on-merge form (cost O(table)); the
     * at-scale refinement is [[upsertPartitioned]] on [[writePartitioned]]
@@ -512,18 +531,17 @@ final class DB private (val root: Path, val spark: SparkSession) {
   def upsert(name: String, df: DataFrame, keys: Seq[String]): Unit = {
     val schema = schemaOf(name)
     requireKeys("upsert", keys, schema)
-    staged(name, df, schema) { batch =>
-      val kept = table(name)
-        .join(batch.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      atomicRewrite(name, kept.unionByName(batch), schema, None)
-    }
+    checkShape(df, schema)
+    mergeByKey(name, nullGuarded(df, schema), keys, keepBatch = true)
   }
 
   /** Keyed DELETE — the MERGE family's third verb: rows matching any key
     * tuple in `keyDf` are removed, committed through the same atomic
     * snapshot rewrite (old-or-new, the deleted version stays readable via
     * [[tableAsOf]] until [[expireSnapshots]]). `keyDf` must carry exactly
-    * the key columns.
+    * the key columns, at types that widen losslessly to the table's; its
+    * tuples enter [[mergeByKey]] as batch rows that are dropped after the
+    * merge.
     */
   def delete(name: String, keyDf: DataFrame, keys: Seq[String]): Unit = {
     val schema = schemaOf(name)
@@ -531,8 +549,42 @@ final class DB private (val root: Path, val spark: SparkSession) {
     require(keyDf.schema.fieldNames.toSeq == keys,
       s"keyDf must carry exactly the key columns $keys, " +
         s"got ${keyDf.schema.fieldNames.toSeq}")
-    val kept = table(name).join(keyDf.distinct(), keys, "left_anti")
-    atomicRewrite(name, kept, schema, None)
+    // the markers take the table's key types; only a lossless widening
+    // (int -> long) may get there, so a cast never changes which key matches
+    require(keys.forall(k => Cast.canUpCast(keyDf.schema(k).dataType,
+        schema(k).dataType)),
+      s"keyDf key types ${keyDf.schema.simpleString} must widen to the " +
+        s"table's ${schema.simpleString}")
+    val markers = keyDf.select(schema.fields.map { f =>
+      (if (keys.contains(f.name)) col(f.name) else lit(null))
+        .cast(f.dataType).as(f.name)
+    }.toSeq: _*)
+    mergeByKey(name, markers, keys, keepBatch = false)
+  }
+
+  /** The keyed merge of [[upsert]] and [[delete]], one sort-merge pass: the
+    * committed rows (tag 0) unioned by name with `batch` (tag 1), and per
+    * key only the rows carrying the key's highest tag survive — every
+    * batch row, and a table row only when no batch row shares its key
+    * (exactly `table anti-join batch-keys ∪ batch`). `keepBatch = false`
+    * then drops the batch rows: a keyed delete. The window runs inside
+    * [[atomicRewrite]]'s job, above its layout step, so the batch is
+    * evaluated once and needs no staging or broadcast. `nFiles` pins the
+    * rewrite's file count (as for [[compact]]; None derives it).
+    */
+  private[graft] def mergeByKey(name: String, batch: DataFrame,
+      keys: Seq[String], keepBatch: Boolean,
+      nFiles: Option[Int] = None): Unit = {
+    val schema = schemaOf(name)
+    val top = max(col("__tag")).over(Window.partitionBy(keys.map(col): _*))
+    atomicRewrite(name,
+      table(name).withColumn("__tag", lit(0))
+        .unionByName(batch.withColumn("__tag", lit(1))),
+      schema, nFiles,
+      _.withColumn("__top", top)
+        .filter(col("__tag") === col("__top") &&
+          col("__tag") <= (if (keepBatch) 1 else 0))
+        .select(schema.fieldNames.map(col).toSeq: _*))
   }
 
   /** Change-data-capture DIFF between two retained snapshot versions (the

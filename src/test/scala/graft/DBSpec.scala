@@ -393,6 +393,15 @@ class DBSpec extends AnyFunSuite with SparkFixture {
       .map(f => java.nio.file.Paths.get(root, "events").relativize(f).toString)
       .toSet
     assert(physical == keep, s"orphans: ${physical.diff(keep)}")
+    // a reclaimed file takes its Hadoop checksum with it
+    val strayCrc = java.nio.file.Files.walk(
+        java.nio.file.Paths.get(root, "events"))
+      .iterator().asScala.filter { p =>
+        val n = p.getFileName.toString
+        n.endsWith(".parquet.crc") && !java.nio.file.Files.exists(
+          p.resolveSibling(n.stripPrefix(".").stripSuffix(".crc")))
+      }.toList
+    assert(strayCrc.isEmpty, s"checksums without their parquet: $strayCrc")
     // a reopened DB (fresh process) sees the same retained history
     val db2 = DB.open(root)
     assert(db2.snapshotVersions("events") == Seq(3L))
@@ -574,6 +583,131 @@ class DBSpec extends AnyFunSuite with SparkFixture {
     assert(db.table("events").count() == 105L)
   }
 
+  /** (event, timestamp, id) tuples of a frame, sorted */
+  private def tuples(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Long)] =
+    df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+
+  /** Spark jobs `body` starts, counted by a listener on a job group of its
+    * own, so jobs of other threads never count
+    */
+  private def jobsRun(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"dbspec-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "DBSpec job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.graftspec.ListenerDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  test("upsert keeps every batch row, duplicate keys included; an empty batch commits unchanged rows") {
+    implicit val s = spark
+    import scala.jdk.CollectionConverters._
+    val db = DB.init(freshDir("mergedup"), Seq("events" -> eventsSchema))
+    val base = (0L until 10L).map(i => Row(s"v1_$i", 1000L + i, i))
+    db.write("events", base)
+    val batch = Seq(Row("a", 1L, 3L), Row("b", 2L, 3L),
+      Row("c", 3L, 20L), Row("c", 3L, 20L))
+    db.upsert("events", s.createDataFrame(batch.asJava, eventsSchema), Seq("id"))
+    val merged = (base.filterNot(_.getLong(2) == 3L) ++ batch)
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted
+    assert(tuples(db.table("events")) == merged)
+    val v = db.snapshotVersions("events").last
+    db.upsert("events", s.createDataFrame(Seq.empty[Row].asJava, eventsSchema),
+      Seq("id"))
+    assert(db.snapshotVersions("events").last == v + 1)
+    assert(tuples(db.table("events")) == merged)
+  }
+
+  test("a null cell aborts upsert: version, rows and table dir unchanged, no scratch left") {
+    implicit val s = spark
+    import scala.jdk.CollectionConverters._
+    val root = freshDir("mergenull")
+    val db = DB.init(root, Seq("events" -> eventsSchema))
+    db.write("events", (0L until 10L).map(i => Row(s"e$i", i, i)))
+    def listing(p: java.nio.file.Path): Set[String] =
+      java.nio.file.Files.walk(p).iterator().asScala
+        .map(f => p.relativize(f).toString).toSet
+    val (versions, rows) = (db.snapshotVersions("events"), tuples(db.table("events")))
+    val dir = listing(java.nio.file.Paths.get(root, "events"))
+    val nullable = StructType(eventsSchema.map(_.copy(nullable = true)))
+    val bad = s.createDataFrame(
+      Seq(Row("x", 1L, 1L), Row("y", null, 2L)).asJava, nullable)
+    val e = intercept[Exception] { db.upsert("events", bad, Seq("id")) }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("Mismatched data type")), e)
+    assert(db.snapshotVersions("events") == versions)
+    assert(tuples(db.table("events")) == rows)
+    assert(listing(java.nio.file.Paths.get(root, "events")) == dir)
+    val scratch = listing(java.nio.file.Paths.get(root)).filter(_.startsWith("events.__"))
+    assert(scratch.isEmpty, s"scratch left behind: $scratch")
+  }
+
+  test("upsert evaluates its batch plan exactly once") {
+    implicit val s = spark
+    import org.apache.spark.sql.functions.{col, lit, udf}
+    val db = DB.init(freshDir("mergeonce"), Seq("events" -> eventsSchema))
+    db.write("events", (0L until 100L).map(i => Row(s"e$i", i, i)))
+    val evals = s.sparkContext.longAccumulator("batch evaluations")
+    val counted = udf { (i: Long) => evals.add(1L); i }
+    val batch = s.range(90L, 100L).select(lit("new").as("event"),
+      col("id").as("timestamp"), counted(col("id")).as("id"))
+    db.upsert("events", batch, Seq("id"))
+    assert(evals.value == 10L, s"batch evaluated ${evals.value / 10.0} times")
+    assert(db.table("events").count() == 100L)
+  }
+
+  test("the merge with n = 3 files writes the same rows in three range-sorted files") {
+    implicit val s = spark
+    import scala.jdk.CollectionConverters._
+    val root = freshDir("mergen3")
+    val db = DB.init(root, Seq("one" -> eventsSchema, "three" -> eventsSchema))
+    val base = (0L until 600L).map(i => Row(s"e${i % 37}", 1000L + i, i))
+    val batch = s.createDataFrame(((300L until 320L) ++ (900L until 910L))
+      .map(i => Row(s"n${i % 5}", 5000L + i, i)).asJava, eventsSchema)
+    Seq("one", "three").foreach(t => db.write(t, base))
+    db.upsert("one", batch, Seq("id"))
+    db.mergeByKey("three", batch, Seq("id"), keepBatch = true, nFiles = Some(3))
+    assert(tuples(db.table("three")) == tuples(db.table("one")))
+    val files = db.snapshotFiles("three").get
+    assert(files.size == 3, s"expected three files: $files")
+    // each file sorted in schema-column order; ranges ordered, disjoint
+    val perFile = files.map(f => s.read.parquet(s"$root/three/$f").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq)
+    perFile.foreach(rs => assert(rs == rs.sorted, "file not sorted"))
+    val ranges = perFile.map(rs => (rs.head, rs.last)).sortBy(_._1)
+    ranges.sliding(2).foreach { case Seq(a, b) =>
+      assert(Ordering[(String, Long, Long)].lt(a._2, b._1), s"overlap: $a $b")
+    }
+  }
+
+  test("upsert and compact of a single-file table each run exactly one Spark job") {
+    implicit val s = spark
+    import scala.jdk.CollectionConverters._
+    val db = DB.init(freshDir("mergejobs"), Seq("events" -> eventsSchema))
+    db.write("events", (0L until 200L).map(i => Row(s"e${i % 7}", i, i)))
+    db.compact("events")
+    assert(db.snapshotFiles("events").get.size == 1)
+    val batch = s.createDataFrame((195L until 205L)
+      .map(i => Row("new", i, i)).asJava, eventsSchema)
+    assert(jobsRun(db.upsert("events", batch, Seq("id"))) == 1)
+    assert(db.snapshotFiles("events").get.size == 1)
+    assert(jobsRun(db.compact("events")) == 1)
+    assert(db.table("events").count() == 205L)
+  }
+
   test("z-ordered layout prunes files on BOTH dimensions; linear sort on one") {
     implicit val s = spark
     import s.implicits._
@@ -656,6 +790,12 @@ class DBSpec extends AnyFunSuite with SparkFixture {
     intercept[IllegalArgumentException] {
       db.delete("dim", Seq((1L, "a")).toDF("k", "v"), Seq("k"))
     }
+    // and at types that widen losslessly: a double key would truncate
+    intercept[IllegalArgumentException] {
+      db.delete("dim", Seq(1.5).toDF("k"), Seq("k"))
+    }
+    db.delete("dim", Seq(9).toDF("k"), Seq("k"))   // int widens to long
+    assert(db.table("dim").count() == 3L)
   }
 
   test("SCD2 upsert: change closes history, no-op resend is silent, PIT view works") {
