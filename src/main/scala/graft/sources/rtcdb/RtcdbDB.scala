@@ -3,7 +3,7 @@ package graft.sources.rtcdb
 import java.nio.file.{Files, Paths, Path}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{LongType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** The reference's public API (`/root/reference/src/lib.rs:16-49`) over the
   * reference's OWN byte format — `DB::init` / `DB::open` / `write_data`
@@ -20,25 +20,15 @@ final class RtcdbDB private (val root: Path, val spark: SparkSession) {
 
   def tables: Map[String, StructType] = RtcdbFormat.readMetadata(root).toMap
 
-  /** validated append-only batch ingest (`src/storage.rs:224-297`
-    * semantics: per-cell type check aborts the whole write; no nulls —
-    * `src/data.rs:10-13` has no Null variant)
+  /** append-only batch ingest in caller order (`src/storage.rs:224-297`
+    * semantics): [[RtcdbFormat.write]] checks every cell and aborts the
+    * whole batch on a mismatched type, a null (`src/data.rs:10-13` has no
+    * Null variant) or a negative u64, and commits through the same
+    * crash-safe commit as the distributed path below
     */
   def write(name: String, rows: Seq[Row]): Unit = {
     val schema = tables.getOrElse(name,
       throw new IllegalArgumentException(s"Table not found: $name"))
-    rows.foreach { r =>
-      if (r.length != schema.length)
-        throw new IllegalArgumentException("Mismatched data type")
-      schema.fields.zipWithIndex.foreach { case (f, i) =>
-        val ok = (f.dataType, r.get(i)) match {
-          case (LongType, _: java.lang.Long) => true
-          case (StringType, _: String)       => true
-          case _                             => false
-        }
-        if (!ok) throw new IllegalArgumentException("Mismatched data type")
-      }
-    }
     RtcdbFormat.write(root.toString, name, schema, rows)
   }
 
@@ -46,8 +36,8 @@ final class RtcdbDB private (val root: Path, val spark: SparkSession) {
     * delegates to the DSv2 writer ([[RtcdbWrite]]), which declares the
     * format's sort contract to Spark (range-sort planned by Catalyst),
     * encodes+compresses per task, and commits by zero-copy concatenation.
-    * Same per-cell semantics as the row path (nulls/mismatches abort the
-    * batch, enforced executor-side).
+    * Same per-cell semantics as the row path (nulls, mismatches and
+    * negative u64 values abort the batch, enforced executor-side).
     */
   def write(name: String, df: DataFrame): Unit = {
     val schema = tables.getOrElse(name,

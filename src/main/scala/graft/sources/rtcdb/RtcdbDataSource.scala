@@ -257,19 +257,18 @@ class RtcdbAggReaderFactory extends PartitionReaderFactory {
           case RtcdbCountAll(via) =>
             // fixed 8-byte big-endian codec ⇒ decompressed bytes / 8 = rows.
             // Block-grain consistency contract: every writer (reference
-            // storage.rs and RtcdbFormat alike) emits the SAME
+            // storage.rs and RtcdbDataWriter alike) emits the SAME
             // rows-per-block for every column of a block, so counting via
             // any one long column agrees with the row path.
-            (entries(via).map(_.decompressedSize / 8).sum, false)
+            entries(via).map(_.decompressedSize / 8).sum
           case RtcdbMinLong(c) =>
             val es = entries(c); guard(c, es)
-            (es.map(e => java.nio.ByteBuffer.wrap(e.min).getLong).min, false)
+            es.map(e => java.nio.ByteBuffer.wrap(e.min).getLong).min
           case RtcdbMaxLong(c) =>
             val es = entries(c); guard(c, es)
-            (es.map(e => java.nio.ByteBuffer.wrap(e.max).getLong).max, false)
+            es.map(e => java.nio.ByteBuffer.wrap(e.max).getLong).max
         }
-        new GenericInternalRow(
-          vals.map(v => if (v._2) null else v._1: Any).toArray)
+        new GenericInternalRow(vals.toArray[Any])
       }
       override def next(): Boolean =
         if (emitted) false else { emitted = true; row; true }
@@ -400,31 +399,24 @@ object RtcdbPruning extends Serializable {
   */
 object RtcdbPlanning {
 
-  /** committed row blocks: the SHORTEST column's index entry count, from
-    * index-file SIZES only (one stat per column). A MISSING index counts
-    * as 0 entries — the rule the commit repair pass applies (RtcdbWrite) —
-    * so the crash window between a first commit's per-column index
-    * publishes reads as the consistent empty/old view.
+  /** committed row blocks: the SHORTEST column's [[RtcdbFormat.entryCount]]
+    * (a missing index counts as 0, the rule the commit repair pass applies),
+    * from index-file SIZES only — one stat per column.
     */
   def committedBlocks(root: String, table: String, declared: StructType): Int =
-    declared.fieldNames.map { c =>
-      val p = indexPath(Paths.get(root), table, c)
-      if (Files.exists(p)) (Files.size(p) / IndexEntryBytes).toInt else 0
-    }.minOption.getOrElse(0)
+    declared.fieldNames.map(c => entryCount(Paths.get(root), table, c).toInt)
+      .minOption.getOrElse(0)
 
   def colSpec(root: String, table: String, declared: StructType,
       c: String): RtcdbColSpec = {
-    val ip = indexPath(Paths.get(root), table, c)
-    // bloom validity (size equation, RtcdbFormat doc): sidecar block count
-    // must equal THIS column's index entry count exactly — a stale, torn,
-    // or legacy sidecar fails the equation and the scan silently degrades
-    // to zone-map-only pruning. One stat call per column, driver-side.
-    val bp = bloomPath(Paths.get(root), table, c)
-    val bloomValid = Files.exists(bp) && Files.exists(ip) &&
-      Files.size(bp) % BloomBytesPerBlock == 0 &&
-      Files.size(bp) / BloomBytesPerBlock == Files.size(ip) / IndexEntryBytes
+    val rootP = Paths.get(root)
+    // bloom validity (RtcdbFormat.bloomInLockstep): a stale, torn, or
+    // legacy sidecar fails the size equation and the scan silently
+    // degrades to zone-map-only pruning. Driver-side stat calls only.
+    val bp = bloomPath(rootP, table, c)
+    val bloomValid = Files.exists(bp) && bloomInLockstep(rootP, table, c)
     RtcdbColSpec(c, declared(c).dataType == LongType,
-      dataPath(Paths.get(root), table, c).toString, ip.toString,
+      dataPath(rootP, table, c).toString, indexPath(rootP, table, c).toString,
       if (bloomValid) bp.toString else null)
   }
 
@@ -847,18 +839,14 @@ class RtcdbPartitionReader(part: RtcdbInputPartition, countOnly: Boolean)
       case EqualTo(a, v) => bloomSlices.get(a).forall { case (isLong, s) =>
         // type-guard mirrors blockMayMatch's literal patterns: only probe
         // when the literal carries the column's exact runtime type
-        if (isLong && v.isInstanceOf[Long])
-          bloomMayContain(s(b), longToBytes8(v.asInstanceOf[Long]))
-        else if (!isLong && v.isInstanceOf[String])
-          bloomMayContain(s(b), v.asInstanceOf[String]
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        else true
+        val typed = if (isLong) v.isInstanceOf[Long] else v.isInstanceOf[String]
+        !typed || bloomMayContain(s(b), bloomValueBytes(isLong, v))
       }
       case _ => true
     } && part.runtimeInSets.forall { case (name, keys) =>
       bloomSlices.get(name) match {
         case Some((true, s)) =>
-          keys.exists(k => bloomMayContain(s(b), longToBytes8(k)))
+          keys.exists(k => bloomMayContain(s(b), bloomValueBytes(true, k)))
         case _ => true
       }
     }

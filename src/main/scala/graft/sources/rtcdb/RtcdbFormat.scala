@@ -3,14 +3,17 @@ package graft.sources.rtcdb
 import java.io.RandomAccessFile
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import net.jpountz.lz4.LZ4Factory
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** The rtcdb on-disk format, re-implemented from the reference's behavior
   * (NOT a code port):
@@ -62,9 +65,9 @@ object RtcdbFormat {
     * The file is headerless like the index: block k's filter lives at
     * byte offset k*1280, so append and concat-commit work identically to
     * index entries. Consistency contract: a column's bloom is VALID only
-    * when its block count equals its index entry count — every writer
+    * when it satisfies the size equation [[bloomInLockstep]] — the commit
     * either appends both in lockstep or deletes the sidecar (legacy
-    * tables, lost files), and readers verify the size equation before
+    * tables, lost files), and readers verify the equation before
     * consulting it, so a stale sidecar degrades to "no pruning", never to
     * a wrong skip.
     */
@@ -111,6 +114,9 @@ object RtcdbFormat {
     true
   }
 
+  /** a value's bloom key, the one definition the encoder inserts and the
+    * reader probes: a u64's 8 big-endian bytes, a string's whole UTF-8
+    * bytes (not the zone map's 8-byte prefix) */
   def bloomValueBytes(isLong: Boolean, v: Any): Array[Byte] =
     if (isLong) longToBytes8(v.asInstanceOf[Long])
     else v.asInstanceOf[String].getBytes(StandardCharsets.UTF_8)
@@ -227,8 +233,8 @@ object RtcdbFormat {
   def unsortedPath(root: Path, table: String): Path =
     root.resolve(s"$table.unsorted")
 
-  /** The leading-column order check both writers run on every block they
-    * append, in order: seeded with the table's current last index entry,
+  /** The leading-column order check the commit runs on every block it
+    * appends, in order: seeded with the table's current last index entry,
     * it creates the fsync'd [[unsortedPath]] marker on the first block
     * whose min sorts below the previous block's max. Call [[append]]
     * BEFORE publishing that block's index entry, so no reader can see an
@@ -238,10 +244,10 @@ object RtcdbFormat {
     private val marker = unsortedPath(root, table)
     private var marked = Files.exists(marker)
     private var prevMax: Array[Byte] = {
-      val ip = indexPath(root, table, lead.name)
-      val n = if (Files.exists(ip)) (Files.size(ip) / IndexEntryBytes).toInt else 0
+      val n = entryCount(root, table, lead.name).toInt
       if (marked || n == 0) null
-      else RtcdbPruning.readEntryRange(ip.toString, n - 1, n).head.max
+      else RtcdbPruning.readEntryRange(
+        indexPath(root, table, lead.name).toString, n - 1, n).head.max
     }
     private def below(a: Array[Byte], b: Array[Byte]): Boolean =
       if (lead.dataType == LongType)
@@ -265,6 +271,27 @@ object RtcdbFormat {
   def indexPath(root: Path, table: String, col: String): Path =
     root.resolve(s"$table.$col.index")
 
+  private def sizeOrZero(p: Path): Long =
+    if (Files.exists(p)) Files.size(p) else 0L
+
+  /** A column's entry count: the whole 40-byte entries of its index (a
+    * torn trailing fragment is no entry). A MISSING index counts as 0 —
+    * the crash window between a first commit's per-column index publishes
+    * — so every reader, the repair pass and the order check see the same
+    * consistent empty/old view.
+    */
+  def entryCount(root: Path, table: String, col: String): Long =
+    sizeOrZero(indexPath(root, table, col)) / IndexEntryBytes
+
+  /** The bloom size equation: a column's sidecar is in lockstep with its
+    * index when it holds exactly one whole filter per index entry (a
+    * missing sidecar holds none). Only a sidecar in lockstep is consulted
+    * by readers or appended to by the commit.
+    */
+  def bloomInLockstep(root: Path, table: String, col: String): Boolean =
+    sizeOrZero(bloomPath(root, table, col)) ==
+      entryCount(root, table, col) * BloomBytesPerBlock
+
   /** 'Never published' vs 'lost': a missing per-column index normally
     * means the crash window between a FIRST commit's per-column index
     * publishes, and every reader/repair path treats it as the consistent
@@ -280,20 +307,15 @@ object RtcdbFormat {
     */
   def warnIfAbsentIndexes(root: Path, table: String,
       fields: Seq[String], context: String): Boolean = {
-    val sized = fields.map { c =>
-      val p = indexPath(root, table, c)
-      c -> (if (java.nio.file.Files.exists(p))
-        java.nio.file.Files.size(p) / IndexEntryBytes else -1L)
-    }
-    val missing = sized.collect { case (c, -1L) => c }
-    val suspicious = missing.nonEmpty && sized.exists(_._2 > 0L)
+    val missing = fields.filterNot(c => Files.exists(indexPath(root, table, c)))
+    val held = fields.map(c => c -> entryCount(root, table, c)).filter(_._2 > 0L)
+    val suspicious = missing.nonEmpty && held.nonEmpty
     if (suspicious)
       org.slf4j.LoggerFactory.getLogger("graft.rtcdb").warn(
         s"$context: table '$table' declares column(s) " +
           missing.mkString("[", ", ", "]") +
           " with NO index file while sibling indexes are non-empty (" +
-          sized.collect { case (c, n) if n > 0 => s"$c=$n" }
-            .mkString(", ") +
+          held.map { case (c, n) => s"$c=$n" }.mkString(", ") +
           " entries). Treating this as the never-published empty view; " +
           "if these index files were lost to external causes, restore " +
           "them NOW — the next append's truncate-to-min repair makes the " +
@@ -303,89 +325,37 @@ object RtcdbFormat {
 
   // ── writer (append-only batch ingest, storage.rs:224-297 semantics) ────
 
+  /** Append `rows` to a declared table in caller order (no sort), on the
+    * driver. It runs the one append path the distributed writer runs: a
+    * single [[RtcdbDataWriter]] encodes the blocks into staged parts, and
+    * [[RtcdbBatchWrite]]'s commit repairs, stitches and publishes them.
+    * The batch is whole or nothing: a row of the wrong arity, a cell of
+    * the wrong type or a null ("Mismatched data type"), or a negative
+    * u64 aborts it with nothing committed and no staged part left.
+    */
   def write(root: String, table: String, schema: StructType,
       rows: Seq[Row]): Unit = {
-    val rootP = Paths.get(root)
-    val compressor = lz4.fastCompressor()
-    // append mode: position starts at current data file length
-    val dataFiles = schema.fields.map { f =>
-      new RandomAccessFile(dataPath(rootP, table, f.name).toFile, "rw")
-    }
-    val indexFiles = schema.fields.map { f =>
-      new RandomAccessFile(indexPath(rootP, table, f.name).toFile, "rw")
-    }
-    // bloom lockstep check BEFORE appending: a column whose sidecar block
-    // count doesn't match its index entry count (legacy table, lost file)
-    // can't take positional appends — delete the sidecar and stop
-    // maintaining it (advisory data; readers then just skip bloom pruning).
-    // The alignment guard matters as much as the count: a partial bloom
-    // tail (crash mid-bloom-append) can pass the integer-division count
-    // while ending at a NON-multiple of BloomBytesPerBlock — appending at
-    // that unaligned offset would permanently shift every later block's
-    // filter bytes, turning the sidecar's "provably absent" answers into
-    // wrong skips once a reader consults it (r9 advice).
-    val bloomOk = schema.fields.map { f =>
-      val ip = indexPath(rootP, table, f.name)
-      val bp = bloomPath(rootP, table, f.name)
-      val entries = if (Files.exists(ip)) Files.size(ip) / IndexEntryBytes else 0L
-      val blooms = if (Files.exists(bp)) Files.size(bp) / BloomBytesPerBlock else 0L
-      val aligned = !Files.exists(bp) ||
-        Files.size(bp) % BloomBytesPerBlock == 0
-      if (entries == blooms && aligned) true
-      else { Files.deleteIfExists(bp); false }
-    }
-    val bloomFiles = schema.fields.zip(bloomOk).map { case (f, ok) =>
-      if (ok) new RandomAccessFile(bloomPath(rootP, table, f.name).toFile, "rw")
-      else null
-    }
-    val order = new OrderGuard(rootP, table, schema.fields.head)
-    try {
-      val positions = dataFiles.map(_.length())
-      dataFiles.foreach(f => f.seek(f.length()))
-      indexFiles.foreach(f => f.seek(f.length()))
-      bloomFiles.foreach(f => if (f != null) f.seek(f.length()))
+    val writer = new RtcdbDataWriter(root, table, schema, 0, 0)
+    val message =
+      try {
+        rows.foreach(r => writer.write(toInternalRow(schema, r)))
+        writer.commit()
+      } catch { case e: Throwable => writer.abort(); throw e }
+    val batch = new RtcdbBatchWrite(root, table, schema, truncate = false)
+    try batch.commit(Array(message))
+    catch { case e: Throwable => batch.abort(Array(message)); throw e }
+  }
 
-      rows.grouped(RowsPerBlock).foreach { block =>
-        schema.fields.zipWithIndex.foreach { case (field, ci) =>
-          val buf = new java.io.ByteArrayOutputStream()
-          var minB: Array[Byte] = null
-          var maxB: Array[Byte] = null
-          var minL = Long.MaxValue
-          var maxL = Long.MinValue
-          val bloom = new Array[Byte](BloomBytesPerBlock)
-          block.foreach { row =>
-            val v = row.get(ci)
-            (field.dataType, v) match {
-              case (LongType, l: java.lang.Long) =>
-                encodeLong(buf, l)
-                minL = math.min(minL, l); maxL = math.max(maxL, l)
-                bloomInsert(bloom, longToBytes8(l))
-              case (StringType, s: String) =>
-                encodeString(buf, s)
-                val p = prefix8(s)
-                if (minB == null || compareBytes(p, minB) < 0) minB = p
-                if (maxB == null || compareBytes(p, maxB) > 0) maxB = p
-                bloomInsert(bloom, s.getBytes(StandardCharsets.UTF_8))
-              case _ =>
-                throw new IllegalArgumentException("Mismatched data type")
-            }
-          }
-          val raw = buf.toByteArray
-          val comp = compressor.compress(raw)
-          dataFiles(ci).write(comp)
-          val entry = IndexEntry(positions(ci), comp.length.toLong, raw.length.toLong,
-            if (field.dataType == LongType) longToBytes8(minL) else minB,
-            if (field.dataType == LongType) longToBytes8(maxL) else maxB)
-          if (ci == 0) order.append(entry.min, entry.max)
-          indexFiles(ci).write(entry.toBytes)
-          if (bloomFiles(ci) != null) bloomFiles(ci).write(bloom)
-          positions(ci) += comp.length
-        }
+  private def toInternalRow(schema: StructType, r: Row): InternalRow = {
+    if (r.length != schema.length)
+      throw new IllegalArgumentException("Mismatched data type")
+    new GenericInternalRow(Array.tabulate[Any](schema.length) { i =>
+      (schema.fields(i).dataType, r.get(i)) match {
+        case (LongType, l: java.lang.Long) => l
+        case (StringType, s: String) => UTF8String.fromString(s)
+        case _ => throw new IllegalArgumentException("Mismatched data type")
       }
-    } finally {
-      dataFiles.foreach(_.close()); indexFiles.foreach(_.close())
-      bloomFiles.foreach(f => if (f != null) f.close())
-    }
+    })
   }
 
   // ── block decode (the read path the reference declared but left dead) ──

@@ -15,8 +15,10 @@ import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import RtcdbFormat._
 
-/** Distributed writer for the rtcdb byte format:
-  * `df.write.format("rtcdb").option("path", root).option("table", t).save()`.
+/** The rtcdb byte format's one append path. Distributed:
+  * `df.write.format("rtcdb").option("path", root).option("table", t).save()`;
+  * serial: [[RtcdbFormat.write]] runs one [[RtcdbDataWriter]] and this
+  * commit on the driver, in caller order (no sort).
   *
   * The reference ingests through a single-threaded driver loop
   * (`/root/reference/src/storage.rs:224-297`); this writer keeps its exact
@@ -46,7 +48,9 @@ import RtcdbFormat._
   * supported via truncate), per-cell type check with the reference's
   * "Mismatched data type" whole-batch abort (a failed task aborts the job
   * and its staged parts are deleted — no partial batch becomes visible),
-  * nulls rejected (the format has no null encoding, data.rs:10-13).
+  * nulls and negative u64 values rejected (the format has no null
+  * encoding, data.rs:10-13), and only into a table metadata.json declares
+  * with the same column names and types.
   */
 class RtcdbWriteBuilder(root: String, table: String, schema: StructType)
     extends WriteBuilder with SupportsTruncate {
@@ -97,21 +101,16 @@ class RtcdbBatchWrite(root: String, table: String, schema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val rootP = Paths.get(root)
-    // register the table (schema must match if already declared)
-    val existing = if (Files.exists(rootP.resolve("metadata.json")))
-      readMetadata(rootP) else Seq.empty
+    // the table must be declared (the provider resolves its schema from
+    // metadata.json at planning, so no write reaches here undeclared);
     // compare names+types only: nullability is a Spark-surface artifact
     // (the format has no nulls; the task writers enforce that per cell)
+    val declared = readMetadata(rootP).toMap.getOrElse(table,
+      throw new IllegalArgumentException(s"Table not found: $table"))
     def shape(s: StructType) = s.fields.map(f => (f.name, f.dataType)).toSeq
-    existing.find(_._1 == table) match {
-      case Some((_, declared)) if shape(declared) != shape(schema) =>
-        throw new IllegalArgumentException(
-          s"rtcdb: table '$table' exists with a different schema")
-      case Some(_) => ()
-      case None =>
-        writeMetadata(rootP, existing :+
-          (table -> StructType(schema.fields.map(_.copy(nullable = false)))))
-    }
+    if (shape(declared) != shape(schema))
+      throw new IllegalArgumentException(
+        s"rtcdb: table '$table' exists with a different schema")
     if (truncate) {
       schema.fieldNames.foreach { c =>
         Files.deleteIfExists(dataPath(rootP, table, c))
@@ -136,38 +135,29 @@ class RtcdbBatchWrite(root: String, table: String, schema: StructType,
     // warn with the file names before making that permanent (RtcdbFormat)
     RtcdbFormat.warnIfAbsentIndexes(rootP, table, schema.fieldNames.toSeq,
       "rtcdb append repair")
-    val entryCounts = schema.fieldNames.map { c =>
-      val p = indexPath(rootP, table, c)
-      if (Files.exists(p)) Files.size(p) / IndexEntryBytes else 0L
+    val entryCounts = schema.fieldNames.map(entryCount(rootP, table, _))
+    val minEntries = entryCounts.minOption.getOrElse(0L)
+    schema.fieldNames.zip(entryCounts).foreach { case (c, n) =>
+      if (n > minEntries)
+        publishIndex(rootP, indexPath(rootP, table, c)) { tmp =>
+          val ch = FileChannel.open(tmp, StandardOpenOption.WRITE)
+          try ch.truncate(minEntries * IndexEntryBytes) finally ch.close()
+        }
     }
-    val minEntries = if (entryCounts.isEmpty) 0L else entryCounts.min
-    if (entryCounts.exists(_ != minEntries))
-      schema.fieldNames.foreach { c =>
-        val p = indexPath(rootP, table, c)
-        if (Files.exists(p) && Files.size(p) / IndexEntryBytes > minEntries)
-          publishIndex(rootP, p) { tmp =>
-            val ch = FileChannel.open(tmp, StandardOpenOption.WRITE)
-            try ch.truncate(minEntries * IndexEntryBytes) finally ch.close()
-          }
-      }
     // bloom sidecars follow the index repair positionally: truncate each
-    // to the repaired entry count; anything NOT in exact lockstep with its
-    // index after that (legacy table, lost/odd-sized file) is deleted —
-    // blooms are advisory, and only the size equation makes a skip sound
+    // holding whole filters past the repaired entry count back to it;
+    // anything NOT in lockstep with its index after that (legacy table,
+    // lost or odd-sized file) is deleted — blooms are advisory, and only
+    // the size equation makes a skip sound
     val bloomOk: Map[String, Boolean] = schema.fieldNames.map { c =>
-      val ip = indexPath(rootP, table, c)
       val bp = bloomPath(rootP, table, c)
-      val entries = if (Files.exists(ip)) Files.size(ip) / IndexEntryBytes else 0L
-      if (Files.exists(bp) &&
-          Files.size(bp) / BloomBytesPerBlock > entries) {
+      if (Files.exists(bp) && Files.size(bp) / BloomBytesPerBlock > minEntries) {
         val ch = FileChannel.open(bp, StandardOpenOption.WRITE)
-        try ch.truncate(entries * BloomBytesPerBlock) finally ch.close()
+        try ch.truncate(minEntries * BloomBytesPerBlock) finally ch.close()
       }
-      val blooms = if (Files.exists(bp)) Files.size(bp) / BloomBytesPerBlock else 0L
-      val aligned = blooms == entries &&
-        (!Files.exists(bp) || Files.size(bp) % BloomBytesPerBlock == 0)
-      if (!aligned) Files.deleteIfExists(bp)
-      c -> aligned
+      val ok = bloomInLockstep(rootP, table, c)
+      if (!ok) Files.deleteIfExists(bp)
+      c -> ok
     }.toMap
     // Stitch parts in partition order — data first, index published LAST:
     // phase 1 appends every column's data bytes (zero-copy channel
@@ -340,35 +330,36 @@ class RtcdbDataWriter(root: String, table: String, schema: StructType,
       var minL = Long.MaxValue
       var maxL = Long.MinValue
       val bloom = new Array[Byte](BloomBytesPerBlock)
+      val isLong = field.dataType == LongType
       buffer.foreach { row =>
         if (row.isNullAt(ci))
           throw new IllegalArgumentException("Mismatched data type")
-        field.dataType match {
+        val v: Any = field.dataType match {
           case LongType =>
             val l = row.getLong(ci)
             if (l < 0) throw new IllegalArgumentException(
               s"rtcdb: negative value $l in uint64 column '${field.name}'")
             encodeLong(buf, l)
             minL = math.min(minL, l); maxL = math.max(maxL, l)
-            bloomInsert(bloom, longToBytes8(l))
+            l
           case StringType =>
             val s = row.getUTF8String(ci).toString
             encodeString(buf, s)
             val p = prefix8(s)
             if (minB == null || compareBytes(p, minB) < 0) minB = p
             if (maxB == null || compareBytes(p, maxB) > 0) maxB = p
-            bloomInsert(bloom,
-              s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            s
           case _ =>
             throw new IllegalArgumentException("Mismatched data type")
         }
+        bloomInsert(bloom, bloomValueBytes(isLong, v))
       }
       val raw = buf.toByteArray
       val comp = lz4.compress(raw)
       outs(ci).write(comp)
       val entry = IndexEntry(positions(ci), comp.length.toLong, raw.length.toLong,
-        if (field.dataType == LongType) longToBytes8(minL) else minB,
-        if (field.dataType == LongType) longToBytes8(maxL) else maxB)
+        if (isLong) longToBytes8(minL) else minB,
+        if (isLong) longToBytes8(maxL) else maxB)
       entryBufs(ci).write(entry.toBytes)
       bloomBufs(ci).write(bloom)
       positions(ci) += comp.length

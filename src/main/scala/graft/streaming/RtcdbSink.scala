@@ -48,8 +48,8 @@ object RtcdbSink {
     val rootP = Paths.get(dbRoot)
     // bootstrap: declare the DB and/or THIS table if absent (the V2
     // provider resolves the table's schema from metadata.json at
-    // planning, BEFORE the write's own commit could register it — so a
-    // second table joining an existing DB must be declared here too)
+    // planning, and the write's commit only appends to a declared table
+    // — so a second table joining an existing DB must be declared here too)
     Files.createDirectories(rootP)
     val declared = org.apache.spark.sql.types.StructType(
       batch.schema.fields.map(_.copy(nullable = false)))

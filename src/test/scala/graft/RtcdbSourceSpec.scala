@@ -29,6 +29,21 @@ class RtcdbSourceSpec extends AnyFunSuite with SparkFixture {
   private def readEvents(root: String) =
     spark.read.format("rtcdb").option("path", root).option("table", "events").load()
 
+  /** appends onto the events table, through each entry point */
+  private def appendRows: Seq[(String, (String, Seq[(String, Long, Long)]) => Unit)] =
+    Seq(
+      "dsv2" -> { (root, rows) =>
+        val s = spark
+        import s.implicits._
+        rows.toDF("event", "timestamp", "id")
+          .write.format("rtcdb").option("path", root).option("table", "events")
+          .mode("append").save()
+      },
+      "serial" -> { (root, rows) =>
+        RtcdbFormat.write(root, "events", eventsSchema,
+          rows.map(r => Row(r._1, r._2, r._3)))
+      })
+
   test("index entry serializes to the reference's golden 40 bytes") {
     // the exact vector from the reference's own unit test
     val entry = RtcdbFormat.IndexEntry(1L, 2L, 3L,
@@ -231,9 +246,23 @@ class RtcdbSourceSpec extends AnyFunSuite with SparkFixture {
 
   test("writer rejects mismatched cell types") {
     val root = freshDb("badtype")
+    RtcdbFormat.write(root, "events", eventsSchema, Seq(Row("ok", 1L, 1L)))
+    // the bad cell sits in row 2,001: two good blocks precede it, and the
+    // whole batch must still abort with nothing committed or staged
+    val rows = (0L until 2000L).map(i => Row(s"e$i", i, i)) :+
+      Row("a", "bad", 1L)
     intercept[IllegalArgumentException] {
-      RtcdbFormat.write(root, "events", eventsSchema, Seq(Row("a", "bad", 1L)))
+      RtcdbFormat.write(root, "events", eventsSchema, rows)
     }
+    assert(readEvents(root).count() == 1L)
+    val staged = new java.io.File(root).list()
+      .filter(n => n.startsWith(".events.") && n.contains(".part-"))
+    assert(staged.isEmpty, s"staged parts left behind: ${staged.toSeq}")
+    // a row of the wrong arity is the same error
+    intercept[IllegalArgumentException] {
+      RtcdbFormat.write(root, "events", eventsSchema, Seq(Row("short", 1L)))
+    }
+    assert(readEvents(root).count() == 1L)
   }
 
   test("RtcdbDB: the reference's full API cycle on its own format") {
@@ -257,6 +286,12 @@ class RtcdbSourceSpec extends AnyFunSuite with SparkFixture {
     intercept[IllegalArgumentException] {
       db.write("events", Seq(Row("a", "bad", 1L)))
     }
+    // a negative long is no uint64: rejected at write time, and the table
+    // still reads (a committed negative would poison every later read)
+    intercept[IllegalArgumentException] {
+      db.write("events", Seq(Row("neg", -5L, 1L)))
+    }
+    assert(db.table("events").filter(col("timestamp") > 0L).count() == 2L)
     intercept[IllegalArgumentException] { RtcdbDB.open(dir + "_nope") }
     // distributed ingest through the same facade (the 100 TB path)
     val sess = spark
@@ -347,28 +382,26 @@ class RtcdbSourceSpec extends AnyFunSuite with SparkFixture {
     // crash-mid-append artifact: a trailing fragment smaller than one
     // 40-byte entry. Whole-entry units only — the fragment must not
     // corrupt the scan, shift block boundaries, or hang the reader.
-    val root = freshDb("torn")
-    RtcdbFormat.write(root, "events", eventsSchema,
-      (1L to 2500L).map(i => Row(s"e$i", 1700000000L + i, i)))
-    val tsIdx = Paths.get(root, "events.timestamp.index")
-    Files.write(tsIdx, Files.readAllBytes(tsIdx) ++ Array.fill(13)(0x7F.toByte))
-    val back = readEvents(root)
-    assert(back.count() == 2500L)
-    assert(back.agg(max(col("timestamp"))).collect().head.getLong(0) ==
-      1700000000L + 2500L)
-    // pushed aggregate path sees the same floor(size/40) block count
-    assert(back.agg(count(lit(1))).collect().head.getLong(0) == 2500L)
-    // a commit AFTER the torn fragment must chop it before appending —
-    // otherwise every appended entry's boundary would misalign
-    val s = spark
-    import s.implicits._
-    Seq(("zz", 1800000000L, 9001L)).toDF("event", "timestamp", "id")
-      .write.format("rtcdb").option("path", root).option("table", "events")
-      .mode("append").save()
-    val after = readEvents(root)
-    assert(after.count() == 2501L)
-    assert(after.filter(col("id") === 9001L).collect()
-      .map(_.getString(0)).toSeq == Seq("zz"))
+    for ((how, append) <- appendRows) {
+      val root = freshDb(s"torn_$how")
+      RtcdbFormat.write(root, "events", eventsSchema,
+        (1L to 2500L).map(i => Row(s"e$i", 1700000000L + i, i)))
+      val tsIdx = Paths.get(root, "events.timestamp.index")
+      Files.write(tsIdx, Files.readAllBytes(tsIdx) ++ Array.fill(13)(0x7F.toByte))
+      val back = readEvents(root)
+      assert(back.count() == 2500L)
+      assert(back.agg(max(col("timestamp"))).collect().head.getLong(0) ==
+        1700000000L + 2500L)
+      // pushed aggregate path sees the same floor(size/40) block count
+      assert(back.agg(count(lit(1))).collect().head.getLong(0) == 2500L)
+      // a commit AFTER the torn fragment must chop it before appending —
+      // otherwise every appended entry's boundary would misalign
+      append(root, Seq(("zz", 1800000000L, 9001L)))
+      val after = readEvents(root)
+      assert(after.count() == 2501L, how)
+      assert(after.filter(col("id") === 9001L).collect()
+        .map(_.getString(0)).toSeq == Seq("zz"), how)
+    }
   }
 
   test("crash between data append and index publish leaves a readable OLD view") {
@@ -431,29 +464,26 @@ class RtcdbSourceSpec extends AnyFunSuite with SparkFixture {
     // every column into rows). The next commit must first truncate every
     // index to the common minimum — the prefix readers already observed —
     // then append.
-    val s = spark
-    import s.implicits._
-    val root = freshDb("repair")
-    RtcdbFormat.write(root, "events", eventsSchema,
-      (1L to 2048L).map(i => Row(s"e$i", 1700000000L + i, i)))
-    // simulate the half-renamed state: 'event' alone gains one extra entry
-    val evIdx = Paths.get(root, "events.event.index")
-    val bytes = Files.readAllBytes(evIdx)
-    Files.write(evIdx, bytes ++ bytes.take(40))
-    Seq(("zz1", 1800000000L, 9001L), ("zz2", 1800000001L, 9002L))
-      .toDF("event", "timestamp", "id")
-      .write.format("rtcdb").option("path", root).option("table", "events")
-      .mode("append").save()
-    val back = readEvents(root)
-    assert(back.count() == 2050)
-    // the appended rows must be intact ACROSS columns (alignment proof)
-    val zz = back.filter(col("id") >= 9001L).collect()
-      .map(r => (r.getString(0), r.getLong(2))).toSet
-    assert(zz == Set(("zz1", 9001L), ("zz2", 9002L)), s"misaligned: $zz")
-    // and every index is back to a single generation (equal entry counts)
-    val counts = Seq("event", "timestamp", "id").map(c =>
-      Files.size(Paths.get(root, s"events.$c.index")) / 40)
-    assert(counts.distinct.size == 1, s"unequal generations: $counts")
+    for ((how, append) <- appendRows) {
+      val root = freshDb(s"repair_$how")
+      RtcdbFormat.write(root, "events", eventsSchema,
+        (1L to 2048L).map(i => Row(s"e$i", 1700000000L + i, i)))
+      // simulate the half-renamed state: 'event' alone gains one extra entry
+      val evIdx = Paths.get(root, "events.event.index")
+      val bytes = Files.readAllBytes(evIdx)
+      Files.write(evIdx, bytes ++ bytes.take(40))
+      append(root, Seq(("zz1", 1800000000L, 9001L), ("zz2", 1800000001L, 9002L)))
+      val back = readEvents(root)
+      assert(back.count() == 2050, how)
+      // the appended rows must be intact ACROSS columns (alignment proof)
+      val zz = back.filter(col("id") >= 9001L).collect()
+        .map(r => (r.getString(0), r.getLong(2))).toSet
+      assert(zz == Set(("zz1", 9001L), ("zz2", 9002L)), s"$how misaligned: $zz")
+      // and every index is back to a single generation (equal entry counts)
+      val counts = Seq("event", "timestamp", "id").map(c =>
+        Files.size(Paths.get(root, s"events.$c.index")) / 40)
+      assert(counts.distinct.size == 1, s"$how unequal generations: $counts")
+    }
   }
 
   test("u64 values >= 2^63 anywhere in a sorted leading column abort planning") {
