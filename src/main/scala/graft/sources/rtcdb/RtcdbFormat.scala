@@ -360,8 +360,8 @@ object RtcdbFormat {
 
   // ── block decode (the read path the reference declared but left dead) ──
 
-  /** decompress + decode one column block into values (UTF8String/Long
-    * handled by the caller via `decodeLongs`/`decodeStrings`) */
+  /** decompress one column block's bytes (decoded by [[decodeLongs]] or
+    * [[decodeUtf8]]) */
   def readBlock(file: RandomAccessFile, e: IndexEntry): Array[Byte] = {
     val comp = new Array[Byte](e.compressedSize.toInt)
     file.seek(e.startPosition)
@@ -377,15 +377,34 @@ object RtcdbFormat {
     out
   }
 
-  def decodeStringBytes(raw: Array[Byte]): Array[Array[Byte]] = {
+  /** a string block's values as views over `raw` (no per-value copy) */
+  def decodeUtf8(raw: Array[Byte]): Array[UTF8String] = {
     val bb = ByteBuffer.wrap(raw)
-    val out = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+    val out = scala.collection.mutable.ArrayBuffer.empty[UTF8String]
     while (bb.remaining() > 0) {
       val len = bb.getInt
-      val b = new Array[Byte](len)
-      bb.get(b)
-      out += b
+      if (len < 0 || len > bb.remaining())
+        throw new IllegalStateException(
+          s"rtcdb: string of $len bytes overruns its block (${bb.remaining()} left)")
+      out += UTF8String.fromBytes(raw, bb.position(), len)
+      bb.position(bb.position() + len)
     }
     out.toArray
+  }
+
+  /** Rows of a u64 column's block, from its index entry alone (the fixed
+    * 8-byte codec): a trusted entry holds 1..[[RowsPerBlock]] whole values
+    * and a non-empty compressed block. Anything else is a damaged index and
+    * throws, naming the table, the column and the block, so an index-only
+    * fold can never turn it into a count.
+    */
+  def u64EntryRows(table: String, col: String, block: Long, e: IndexEntry): Int = {
+    val d = e.decompressedSize
+    if (d <= 0 || d % 8 != 0 || d > RowsPerBlock * 8L || e.compressedSize <= 0)
+      throw new IllegalStateException(
+        s"rtcdb: table '$table' column '$col' block $block has a damaged index " +
+          s"entry (decompressed $d bytes, compressed ${e.compressedSize} bytes; " +
+          s"a u64 block holds 1..$RowsPerBlock values of 8 bytes); refusing to read")
+    (d / 8).toInt
   }
 }

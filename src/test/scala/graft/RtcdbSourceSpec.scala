@@ -347,7 +347,8 @@ class RtcdbSourceSpec extends AnyFunSuite with SparkFixture {
     val pushed = readEvents(root).agg(
       count(lit(1)).as("n"), max(col("timestamp")).as("mx"))
       .collect().head
-    // row path: a residual filter disables pushdown; predicate keeps all rows
+    // decoded path: a comparison folds from decoded blocks, not the index
+    // alone; the predicate keeps all rows
     val scanned = readEvents(root).filter(col("timestamp") > 0)
       .agg(count(lit(1))).collect().head.getLong(0)
     assert(pushed.getLong(0) == 2048L, s"pushed count=${pushed.getLong(0)}")
@@ -523,22 +524,41 @@ class RtcdbSourceSpec extends AnyFunSuite with SparkFixture {
     assert(msg.contains("refusing to read"), s"unexpected error: $msg")
   }
 
-  test("aggregate pushdown declines: filters, grouping, string min/max") {
+  test("aggregate pushdown: exact filters push, other shapes decline") {
     val root = freshDb("aggdecline")
     val rows = (1L to 500L).map(i => Row(f"e$i%04d", 1700000000L + i, i))
     RtcdbFormat.write(root, "events", eventsSchema, rows)
-    // a WHERE clause forces row-level evaluation — data files get read
-    val filtered = readEvents(root).filter(col("id") <= 100)
-      .agg(count(lit(1))).collect().head.getLong(0)
+    def pushed(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+          r.scan
+      }.exists(_.isInstanceOf[graft.sources.rtcdb.RtcdbAggScan])
+    // a WHERE clause the source evaluates exactly folds in the reader
+    val filteredDf = readEvents(root).filter(col("id") <= 100).agg(count(lit(1)))
+    assert(pushed(filteredDf))
+    val filtered = filteredDf.collect().head.getLong(0)
     assert(filtered == 100L)
-    // grouping is never pushed
-    val grouped = readEvents(root).groupBy(col("id") % 2)
-      .count().collect().map(_.getLong(1)).sorted.toSeq
+    // expression grouping is never pushed
+    val groupedDf = readEvents(root).groupBy(col("id") % 2).count()
+    assert(!pushed(groupedDf))
+    val grouped = groupedDf.collect().map(_.getLong(1)).sorted.toSeq
     assert(grouped == Seq(250L, 250L))
     // string min/max: zone maps are 8-byte prefixes (not exact values) —
     // must fall back to the row scan and still be exact
-    val smin = readEvents(root).agg(min(col("event"))).collect().head.getString(0)
+    val sminDf = readEvents(root).agg(min(col("event")))
+    assert(!pushed(sminDf))
+    val smin = sminDf.collect().head.getString(0)
     assert(smin == "e0001")
+    // DISTINCT, AVG and a residual (non-comparison) filter decline too
+    val distinctDf = readEvents(root).agg(countDistinct(col("id")))
+    assert(!pushed(distinctDf))
+    assert(distinctDf.collect().head.getLong(0) == 500L)
+    val avgDf = readEvents(root).agg(avg(col("id")))
+    assert(!pushed(avgDf))
+    assert(avgDf.collect().head.getDouble(0) == 250.5)
+    val residualDf = readEvents(root).filter(col("id") % 3 === 0).agg(count(lit(1)))
+    assert(!pushed(residualDf))
+    assert(residualDf.collect().head.getLong(0) == 166L)
   }
 
   test("distributed writer: df.write round-trips and matches the serial writer's bytes") {
